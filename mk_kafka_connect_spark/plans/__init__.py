@@ -3,24 +3,6 @@
 from . import advanced, analysis, curation, evaluation, governance, graph, inference, layout, llm, relational, rest, scalar, streaming, textstats, tpch, udf, warehouse  # noqa: F401
 from . import audit  # noqa: F401  (round-18 family; imported last so earlier registration order is stable)
 from .registry import (
-    CERTIFICATION_FRONT as _FRONT,
-    QUERIES as _Q,
-)
-
-# Integrity guard: every CERTIFICATION_FRONT name must exist in the registry.
-# certification_order() intentionally tolerates absences at call time, but a
-# front entry that never registers is a broken promise (round 3 shipped 12
-# phantom names this way) — fail at import, not silently at certification.
-_missing = set(_FRONT) - set(_Q)
-if _missing:
-    raise ImportError(
-        f"CERTIFICATION_FRONT names missing from the query registry: "
-        f"{sorted(_missing)}"
-    )
-del _FRONT, _Q, _missing
-
-from .registry import (  # noqa: E402
-    CERTIFICATION_FRONT,
     QUERIES,
     certification_order,
     oracle_queries,
@@ -33,6 +15,5 @@ __all__ = [
     "query",
     "spark_queries",
     "oracle_queries",
-    "CERTIFICATION_FRONT",
     "certification_order",
 ]

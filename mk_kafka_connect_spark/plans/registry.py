@@ -12,6 +12,8 @@ values.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -23,29 +25,9 @@ __all__ = [
     "query",
     "spark_queries",
     "oracle_queries",
-    "CERTIFICATION_FRONT",
-    "R9_NEVER_CERTIFIED",
-    "R9_ADDITIONS",
-    "R10_ADDITIONS",
-    "R2_STALE_RECERTS",
-    "R12_ORPHANS",
-    "R12_ADDITIONS",
-    "R6_STALE_FILL",
-    "R13_ADDITIONS",
-    "R14_ADDITIONS",
-    "R15_REWRITTEN_RECERTS",
-    "R8_STALE_FILL",
-    "R15_ADDITIONS",
-    "R16_ADDITIONS",
-    "R16_REWRITTEN_RECERTS",
-    "R17_ADDITIONS",
-    "R17_REWRITTEN_RECERTS",
-    "R18_STALE_HEAD",
-    "R9_STALE_FILL",
-    "R19_STALE_POOL",
-    "R19_REWRITTEN_RECERTS",
-    "R18_ADDITIONS",
-    "R18_REWRITTEN_RECERTS",
+    "DRIVER_WINDOW",
+    "LEDGER",
+    "load_ledger",
     "certification_order",
 ]
 
@@ -63,965 +45,49 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-# The driver's correctness gate certifies only the FIRST 50 entries of the
-# exposed query dict (CORRECTNESS_r02 checked set == first 50 of registration
-# order). CERTIFICATION_FRONT pins the queries that most need a driver row —
-# never-certified surfaces, fixed-but-not-recertified queries, and the
-# queries added this round — into those slots. Everything else follows in
-# registration order and stays covered by the pytest oracle-parity suite
+# The driver's correctness gate certifies only the FIRST DRIVER_WINDOW
+# entries of the exposed query dict. Which queries land there is computed
+# from the fingerprint ledger by certification_order(); everything else
+# stays covered by the pytest oracle-parity suite
 # (tests/test_oracle_parity.py), which runs the same comparison locally.
-# The per-round rotation schedule (which rounds certified which queries,
-# and what to pin next round) is documented in COVERAGE.md §"Driver
-# certification rotation".
-#
-# Round-9 window (VERDICT r8 "Next round" #1): after r8, exactly 50 of the
-# 186 registered queries have NO green driver row in any CORRECTNESS_r0N.json
-# (the r7 driver run never happened, so the whole r7 window plus the r8
-# overflow was never independently certified). 50 never-certified queries =
-# 50 driver slots: this window closes driver coverage completely — after a
-# green r9 run, every registered query has at least one driver row ever.
-# The list below is derived from CORRECTNESS_r01–r08 vs the registry (the
-# derivation is pinned by tests/test_registry_rotation.py, which recomputes
-# it from the artifact files).
-R9_NEVER_CERTIFIED: tuple[str, ...] = (
-    "agg_approx_distinct",
-    "agg_approx_quantiles",
-    "agg_heavy_hitters",
-    "agg_hll_sketch_merge",
-    "cdc_scd2_history",
-    "cohort_retention_weekly",
-    "dedup_clusters",
-    "dedup_embedding_clusters",
-    "dedup_minhash_incremental",
-    "docs_balance_strata",
-    "docs_chunk_overlap",
-    "docs_decontaminate_lsh",
-    "docs_epoch_mixture",
-    "docs_ngram_topk",
-    "docs_pack_sequences",
-    "docs_quality_topfrac_by_lang",
-    "docs_stratified_sample",
-    "docs_tfidf_topterms",
-    "docs_vocab_coverage",
-    "docs_weighted_sample",
-    "emb_covariance",
-    "emb_label_centroids",
-    "events_anomaly_zscore",
-    "events_gapfill_hourly",
-    "events_gapfill_locf",
-    "events_rollup_multires",
-    "funnel_view_click_purchase",
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_lateral_topk",
-    "join_range_binned",
-    "join_skew_salted",
-    "kafka_file_roundtrip",
-    "multimodal_ahash",
-    "multimodal_resize",
-    "pipeline_training_data_v2",
-    "profile_orders",
-    "rest_roundtrip_events",
-    "rest_scan_events",
-    "rest_stream_events",
-    "sim_nearest_centroid",
-    "sim_topk_ivf_sq8",
-    "sim_topk_lsh",
-    "sim_topk_sq8",
-    "streaming_dedup_then_window",
-    "streaming_stream_stream_join",
-    "streaming_stream_stream_left_join",
-    "text_pii_redact",
-    "transform_smt_chain",
-    "udf_pandas_grouped_agg",
-)
-
-# Queries ADDED during round 9 — they also have zero driver rows, but the
-# window is exactly filled by the never-certified backlog above, so they
-# queue immediately AFTER the window (first in line for the r10 front) and
-# are covered this round by the local oracle-parity pytest suite.
-R9_ADDITIONS: tuple[str, ...] = (
-    "sim_mmr_rerank",
-    "bpe_merges",
-    "streaming_cdc_scd2",
-    "layout_zorder_pruning_stats",
-    "graph_triangles",
-    "events_ols_trend",
-    "events_decayed_leaderboard",
-    "events_seasonal_backtest",
-    "events_disorder_profile",
-    "orders_trimmed_mean",
-    "streaming_ivm_orders",
-    "join_interval_overlap",
-    "sim_recall_ivf_vs_exact",
-    "docs_decontamination_report",
-    "emb_top_eigenvector",
-    "emb_pca_projection",
-)
-
 DRIVER_WINDOW = 50
 
-# Queries ADDED during round 10 — extended as each lands; they join the
-# front immediately behind the r9 additions.
-R10_ADDITIONS: tuple[str, ...] = (
-    "events_rolling_distinct_users",
-    "events_cusum_changepoint",
-    "events_histogram_drift",
-    "events_pattern_journeys",
-    "graph_kcore",
-    "docs_bm25_topk",
-    "multimodal_audio_energy",
-    "join_asof_tolerance",
-    "scalar_url_funcs",
-    "orders_interpurchase_hazard",
-    "multimodal_shot_boundaries",
-    "docs_dataset_card",
-    "docs_bpe_token_counts",
-    "orders_weighted_median",
-    "graph_communities_lpa",
-    "orders_benford_digits",
-    "events_mad_anomaly",
-    "orders_seq2_patterns",
-    "orders_revenue_bridge",
-    "docs_readability",
-    "docs_collocations_lift",
-    "docs_char_bigram_rarity",
-    "graph_linkpred",
-    "multimodal_phash_dct",
-    "multimodal_phash_neardup",
-    "er_fuzzy_join_edit1",
-    "dq_fd_discovery",
-    "events_peak_detection",
-    "streaming_topk_per_window",
-)
-
-# Round-10 window: CORRECTNESS_r09 certified all 50 of the r9 backlog,
-# so every query registered before r9 now has >=1 green driver row ever
-# and the coverage bar is closed. The r10 front therefore (a) certifies
-# the 16 queries added during r9 (zero driver rows yet), (b) certifies
-# everything added during r10, and (c) spends the remaining slots
-# RE-certifying the stalest evidence: the 36 queries whose newest green
-# driver row is still round 2 (derivation pinned by
-# tests/test_registry_rotation.py from the artifact files).
-R2_STALE_RECERTS: tuple[str, ...] = (
-    "agg_case_when_buckets",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_having_filter",
-    "agg_percentiles",
-    "agg_rollup",
-    "agg_stats",
-    "bucketed_join_revenue",
-    "cdc_merge_upsert",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "dedup_exact",
-    "dedup_latest_wins",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "distinct_pairs",
-    "expand_customer_flat",
-    "expand_items_nested",
-    "filter_predicates",
-    "join_cross",
-    "join_theta_range",
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    "projection_computed",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "sim_topk_bruteforce",
-    "skew_salted_agg",
-    "subquery_correlated_scalar",
-    "subquery_exists",
-    "subquery_in_scalar",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality_score",
-    "text_token_stats",
+# The fingerprint ledger (maintained by tools/fingerprints.py): per query,
+# the source-closure fingerprint its newest green driver row certified,
+# that row's round (``evidence_round``) and, when HEAD code no longer
+# matches the fingerprint, ``drifted: true``.
+LEDGER = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "QUERY_FINGERPRINTS.json",
 )
 
 
-def _r10_front() -> tuple[str, ...]:
-    head = list(R9_ADDITIONS) + [n for n in R10_ADDITIONS if n not in R9_ADDITIONS]
-    fill = [n for n in R2_STALE_RECERTS if n not in head]
-    return tuple((head + fill)[:DRIVER_WINDOW])
+def load_ledger() -> dict[str, dict]:
+    """The fingerprint ledger, or ``{}`` when the file is absent."""
+    if not os.path.exists(LEDGER):
+        return {}
+    with open(LEDGER) as f:
+        return json.load(f)
 
 
-# ---------------------------------------------------------------------------
-# Round-12 rotation (VERDICT r11 "Next round" #4). The r10 AND r11 driver
-# windows both certified _r10_front() — its 45 additions plus the first five
-# stale re-certs (the agg_* head of R2_STALE_RECERTS); round 11 shipped no
-# registry change, so the r11 window re-ran the identical set. What remains
-# owed is (a) the two queries with NO driver row in any CORRECTNESS artifact
-# (the registry-rotation orphans this round finally enrolls) and (b) the 31
-# R2_STALE_RECERTS that did not fit the r10 window. That is 33 committed
-# slots; the rest of the window goes to queries ADDED during round 12, then
-# any still-free slots re-certify the stalest surviving evidence (newest
-# green row = round 6), in registration order. Derivations are recomputed
-# from the artifact files by tests/test_registry_rotation.py.
-# ---------------------------------------------------------------------------
+def certification_order(ledger: dict[str, dict] | None = None) -> list[str]:
+    """Every registered query, the one most owed driver evidence first.
 
-# Registered but never driver-certified (both fail-listed in VERDICT r10/r11).
-R12_ORPHANS: tuple[str, ...] = (
-    "docs_zipf_fit",
-    "dedup_lsh_recall_report",
-)
-
-# Queries REWRITTEN during round 12 (the global-window scale fix, VERDICT
-# r11 item 2) whose newest driver row predates the rewrite — pinned for
-# re-certification directly behind the owed set. docs_zipf_fit was also
-# rewritten but is already pinned via R12_ORPHANS.
-R12_REWRITTEN: tuple[str, ...] = (
-    "docs_bm25_topk",
-    "docs_collocations_lift",
-    "docs_char_bigram_rarity",
-    "docs_vocab_coverage",
-    "orders_pareto_customers",
-    "graph_linkpred",
-)
-
-# Queries ADDED during round 12 — extended as each lands; they take the
-# window slots directly behind the rewrites.
-R12_ADDITIONS: tuple[str, ...] = (
-    "docs_boilerplate_fraction",
-    "docs_ngram_novelty_curve",
-    "emb_outlier_centroid_dist",
-    "dq_candidate_keys",
-    "graph_bfs_levels",
-    "docs_neardup_overlap_matrix",
-    "bpe_fertility_by_source",
-    "dq_referential_orphans",
-    "cdc_scd2_integrity",
-    "pipeline_stage_funnel",
-    "docs_sample_exact_budget",
-    "docs_greedy_pack_stats",
-    "dedup_split_leakage",
-    "sim_hybrid_rrf",
-    "docs_dsir_importance",
-    "emb_matryoshka_recall",
-    "agg_countmin_estimates",
-    "agg_kmv_set_sketch",
-    "sim_mutual_knn",
-    "docs_ks_drift_by_source",
-    "orders_gini_coefficient",
-    "events_acf_hourly",
-)
-
-# Queries whose newest green driver row is round 6 (registration order) —
-# the fill pool for any window slots the owed set + r12 additions leave free.
-R6_STALE_FILL: tuple[str, ...] = (
-    "text_repetition_stats",
-    "text_gopher_quality",
-    "sim_topk_ivf",
-    "docs_hash_split",
-    "docs_decontaminate",
-    "pipeline_training_data",
-    "q1_pricing_summary",
-    "window_rank_funcs",
-    "window_running_agg",
-    "window_range_frame",
-    "sessionize_events",
-    "topk_per_group",
-    "sort_limit_offset",
-    "set_union_all",
-    "set_intersect",
-    "set_except",
-    "set_except_all",
-    "pivot_event_counts",
-    "unpivot_order_stats",
-    "scalar_string_funcs",
-    "scalar_regex_funcs",
-    "scalar_datetime_funcs",
-    "scalar_math_funcs",
-    "scalar_array_funcs",
-    "scalar_json_funcs",
-    "string_cast_transform",
-    "scalar_map_funcs",
-    "scalar_posexplode",
-    "streaming_tumbling_window",
-    "streaming_sliding_window",
-    "streaming_session_window",
-    "streaming_dedup",
-    "streaming_stream_static_join",
-    "streaming_stateful_running",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q12_shipmode_priority",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q18_large_volume_customer",
-    "q19_discount_revenue",
-    "q21_suppliers_kept_waiting",
-    "q22_global_sales_opportunity",
-    "udf_row_python",
-    "udf_pandas_vectorized",
-    "udf_grouped_apply",
-    "udf_python_udtf",
-)
-
-
-# Queries ADDED during round 13 — extended as each lands. The r12 driver
-# never ran (no CORRECTNESS_r12.json, like r7), so the r12 front below is
-# still the owed window and stays pinned for the r13 driver run; these
-# queue behind the r12-addition overflow via certification_order().
-R13_ADDITIONS: tuple[str, ...] = (
-    "dq_k_anonymity",
-    "docs_nb_quality_classifier",
-    "docs_wordlm_xent",
-    "dedup_semantic_kmeans",
-    "events_holt_forecast",
-    "docs_weighted_reservoir",
-    "er_fellegi_sunter",
-    "events_binseg_changepoints",
-    "docs_wordpiece_fertility",
-    "orders_survival_km",
-    "scalar_hof_funcs",
-    "dq_dp_noise_calibration",
-    "docs_unigram_mdl",
-    "docs_textrank_keywords",
-    "sim_knn_loo_eval",
-    "docs_good_turing",
-    "docs_heaps_law",
-    "events_mannwhitney_value",
-    "orders_conformal_interval",
-    "graph_assortativity",
-    "events_permutation_test",
-    "orders_theil_sen",
-    "events_kruskal_wallis",
-)
-
-
-def _r12_front() -> tuple[str, ...]:
-    certified_r10_r11 = set(_r10_front())
-    owed = list(R12_ORPHANS) + [
-        n for n in R2_STALE_RECERTS if n not in certified_r10_r11
-    ]
-    head = owed + [n for n in R12_REWRITTEN if n not in owed]
-    head += [n for n in R12_ADDITIONS if n not in head]
-    fill = [n for n in R6_STALE_FILL if n not in head]
-    return tuple((head + fill)[:DRIVER_WINDOW])
-
-
-# Queries ADDED during round 14 — extended as each lands; they queue
-# directly behind the r14 window via certification_order().
-R14_ADDITIONS: tuple[str, ...] = (
-    "streaming_topic_fanout",
-    "scan_schema_evolution",
-    "dq_corrupt_record_quarantine",
-    "join_dpp_partitioned",
-    "udf_arrow_batches",
-    "join_null_safe",
-    "set_union_by_name",
-    "pipeline_observe_metrics",
-    "udf_grouped_apply_arrow",
-    "scan_csv_json_roundtrip",
-    "scalar_variant_funcs",
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-14 rotation (VERDICT r13 "Next round" #1). CORRECTNESS_r13 certified
-# exactly _r12_front() 50/50 green, which leaves 34 registry entries with NO
-# driver row ever: the 11 r12 additions past the r13 window
-# (docs_greedy_pack_stats .. events_acf_hourly) plus all 23 r13 additions.
-# Those 34 take the head; the 16 free slots re-certify the stalest surviving
-# evidence (newest green row = round 6, registration order). Derivations are
-# recomputed from CORRECTNESS_r01–r13 by tests/test_registry_rotation.py.
-# ---------------------------------------------------------------------------
-def _r14_front() -> tuple[str, ...]:
-    certified_r13 = set(_r12_front())
-    head = [n for n in R12_ADDITIONS if n not in certified_r13]
-    head += [n for n in R13_ADDITIONS if n not in head]
-    head += [n for n in R14_ADDITIONS if n not in head]
-    fill = [n for n in R6_STALE_FILL if n not in head]
-    return tuple((head + fill)[:DRIVER_WINDOW])
-
-
-# Queries whose CODE or ORACLE was rewritten AFTER their newest green
-# driver row, making that hard evidence stale-by-code (the r15 head,
-# VERDICT r14 "Next round" #1): dq_fd_discovery's newest row (r11)
-# predates both the r14 single-pass plan rewrite and the r15
-# NULL-as-value convention; the other two were r14-certified but got
-# round-15 edits (quarantine NULL-payload normalization; mapInArrow
-# empty-segment/sliced-offsets kernel guard).
-R15_REWRITTEN_RECERTS: tuple[str, ...] = (
-    "dq_fd_discovery",
-    "dq_corrupt_record_quarantine",
-    "udf_arrow_batches",
-)
-
-
-# Queries whose newest green driver row is round 8 (registration order) —
-# the r15 backfill pool behind the rewritten re-certs + the 45-query
-# r6-evidence pool + round-15 additions. Derivation recomputed from the
-# CORRECTNESS_r01–r14 artifacts by tests/test_registry_rotation.py.
-R8_STALE_FILL: tuple[str, ...] = (
-    "agg_bitmap_distinct",
-    "join_bloom_prefilter",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "orders_rfm_segments",
-    "events_dau_wau",
-    "dq_checks_orders",
-    "cdc_snapshot_asof",
-    "basket_brand_affinity",
-    "agg_bitmap_audience_overlap",
-    "orders_cohort_ltv",
-    "supplier_concentration_hhi",
-    "orders_open_backlog",
-    "agg_quantiles_distributed",
-    "cdc_snapshot_diff",
-    "diag_key_skew",
-    "dedup_verbatim_spans",
-    "docs_length_histogram",
-    "multimodal_ahash_neardup",
-    "sim_topk_pq",
-    "sim_topk_ivf_pq",
-    "dedup_ngram_containment",
-    "text_langid_confusion",
-    "docs_oov_rate",
-    "graph_pagerank",
-    "filter_range_halfopen",
-    "join_left_nulls",
-    "join_right",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_asof",
-    "events_time_weighted_avg",
-    "events_markov_transitions",
-    "events_session_paths",
-    "funnel_conversion_latency",
-    "events_attribution_models",
-    "cdc_pipeline_end_to_end",
-    "streaming_active_users_hourly",
-    "streaming_stream_stream_full_join",
-    "streaming_cdc_scd1",
-    "events_ohlc_hourly",
-    "events_ewma",
-    "events_ab_test",
-    "ivm_orders_summary",
-    "join_fact_scd2_temporal",
-    "er_name_neardup",
-    "events_trend_mannkendall",
-)
-
-
-# Queries ADDED during round 15 — extended as each lands; overflow past
-# the window queues directly behind it via certification_order()
-# (additions first: never-certified outranks stale re-certs).
-R15_ADDITIONS: tuple[str, ...] = (
-    "cdc_incremental_cron_replay",
-    "streaming_stream_stream_semi_join",
-    "cdc_variant_pipeline",
-    "rest_retry_backoff_e2e",
-    "streaming_stream_stream_right_join",
-    "sql_recursive_hierarchy",
-    "sql_pipe_query",
-    "scalar_collation_funcs",
-    "scalar_ansi_try_funcs",
-    "scalar_xml_funcs",
-    "events_jackknife_variance",
-    "events_block_bootstrap_ci",
-    "ivm_join_delta",
-    "rest_config_fanout_probe",
-    "scan_orc_roundtrip",
-    "sql_group_by_all",
-    "agg_listagg_bitwise",
-    "dq_t_closeness",
-    "join_geo_gridblock",
-    "scalar_interval_funcs",
-    "events_stl_decompose",
-    "scan_binaryfile_manifest",
-    "scalar_time_funcs",
-    "sql_parameterized_exec",
-    "agg_approx_topk",
-    "emb_ridge_normal_eq",
-    "orders_feature_standardize",
-    "udf_arrow_scalar",
-    "udf_udtf_table_arg",
-    "sql_udf_functions",
-    "sql_identifier_clause",
-    "scan_partition_pruning_static",
-    "events_hll_sliding_window",
-    "events_higher_moments",
-    "join_strategy_hints",
-    "streaming_hll_distinct_window",
-    "join_aqe_skew_split",
-    "layout_compaction_roundtrip",
-    "sql_pivot_unpivot_clause",
-    "events_sax_motifs",
-    "events_fdr_bh",
-    "sql_filter_window_clause",
-    "docs_url_canonical_dedup",
-    "multimodal_magic_bytes",
-    "agg_hll_sketch_persist",
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-15 rotation (VERDICT r14 "Next round" #1). CORRECTNESS_r14 certified
-# exactly _r14_front() 50/50 green — the round that closed 289/289
-# ever-certified. The r15 window re-certifies the three queries whose code
-# or oracle changed after their newest driver row, then the 45 queries
-# whose newest evidence is still round 6, then round-15 additions, then
-# backfills from the 49-query round-8 pool. Derivations recomputed from
-# CORRECTNESS_r01–r14 by tests/test_registry_rotation.py.
-# ---------------------------------------------------------------------------
-def _r15_front() -> tuple[str, ...]:
-    certified_r14 = set(_r14_front())
-    head = list(R15_REWRITTEN_RECERTS)
-    head += [
-        n for n in R6_STALE_FILL if n not in certified_r14 and n not in head
-    ]
-    head += [n for n in R15_ADDITIONS if n not in head]
-    fill = [n for n in R8_STALE_FILL if n not in head]
-    return tuple((head + fill)[:DRIVER_WINDOW])
-
-
-# ---------------------------------------------------------------------------
-# Round-16 rotation (VERDICT r15 "Next round" #1). CORRECTNESS_r15 certified
-# exactly _r15_front() 50/50 green, which consumed the r15-rewritten
-# re-certs, the whole round-6 staleness pool, and the first two r15
-# additions. That leaves exactly 43 registry entries with NO driver row
-# ever — the round-15 addition overflow — plus the 49-query round-8
-# evidence pool untouched. The r16 window pins the 43 orphans first
-# (closing driver coverage to 334/334 ever-certified, and flipping
-# A16/A17/A18 via rest_config_fanout_probe), then backfills its 7
-# remaining slots from the round-8 pool. Derivations recomputed from
-# CORRECTNESS_r01–r15 by tests/test_registry_rotation.py.
-# ---------------------------------------------------------------------------
-def _r16_front() -> tuple[str, ...]:
-    certified_r15 = set(_r15_front())
-    head = [n for n in R15_ADDITIONS if n not in certified_r15]
-    fill = [n for n in R8_STALE_FILL if n not in certified_r15 and n not in head]
-    return tuple((head + fill)[:DRIVER_WINDOW])
-
-
-# CERTIFICATION_FRONT is assigned below, after the round-17 pools —
-# _r17_front() needs R16_REWRITTEN_RECERTS / R16_ADDITIONS in scope.
-
-
-# Round-16 additions: zero driver rows by definition; they queue behind
-# the r8-pool leftovers for the r17 window via certification_order().
-R16_ADDITIONS: tuple[str, ...] = (
-    "rest_filter_pushdown",
-    "rest_stream_sink_e2e",
-    "scan_xml_roundtrip",
-    "streaming_state_introspection",
-    "sql_session_variables",
-    "udf_udtf_dynamic_schema",
-    "multimodal_image_dims",
-    "sql_lateral_column_alias",
-    "streaming_join_state_introspection",
-    "udf_pandas_iter_scalar",
-    "docs_ccnet_buckets",
-)
-
-# Queries whose code changed in round 16 AFTER their newest driver row
-# (the materialize_result refactor swapped their result-materialization
-# wrapper; docs_wordlm_xent had its scored-table computation extracted
-# into the shared _wordlm_scored helper — mechanically identical, but
-# the discipline is evidence-based, not intent-based): stale-by-code,
-# so they head the r17 window. Corrected in round 17 per ADVICE r16:
-# the original list named streaming_topk_per_window (whose body the
-# r16 diff never touched — its newest row, r11, is merely old, not
-# stale-by-code) and omitted cdc_incremental_cron_replay, whose
-# backing helper _run_incremental_cron_replay DID receive the
-# materialize_result swap (streaming.py:869) after its r15 row. The
-# QUERY_FINGERPRINTS.json ledger + tests/test_stale_by_code.py now
-# derive this set mechanically so it cannot drift again.
-R16_REWRITTEN_RECERTS: tuple[str, ...] = (
-    "docs_wordlm_xent",
-    "scan_schema_evolution",
-    "join_dpp_partitioned",
-    "scan_csv_json_roundtrip",
-    "streaming_cdc_scd1",
-    "streaming_cdc_scd2",
-    "streaming_ivm_orders",
-    "cdc_incremental_cron_replay",
-    "streaming_topic_fanout",
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-17 rotation (VERDICT r16 "Next round" #1). CORRECTNESS_r16
-# certified exactly _r16_front() 50/50 green — consuming the 43
-# never-certified r15-addition orphans (restoring 334/334
-# ever-certified) plus the 7 stalest r8-pool queries. The r17 window
-# pins the 20 priority queries first: the 9 stale-by-code
-# R16_REWRITTEN_RECERTS (code changed after their newest driver row by
-# the materialize_result refactor) and the 11 never-certified
-# R16_ADDITIONS — restoring both every-query-ever-certified AND
-# every-driver-row-current-code — then backfills its 30 remaining
-# slots from the 41-query r8-evidence pool leftover (42 minus
-# streaming_cdc_scd1, which the recert head already carries). The 11
-# pool queries that do not fit are pinned at the head of the r18 queue
-# (R18_STALE_HEAD below) so the r8 pool provably drains to zero next
-# round. Derivations recomputed from CORRECTNESS_r01–r16 by
-# tests/test_registry_rotation.py.
-# ---------------------------------------------------------------------------
-def _r17_front() -> tuple[str, ...]:
-    consumed = set(_r15_front()) | set(_r16_front())
-    head = list(R16_REWRITTEN_RECERTS)
-    head += [n for n in R16_ADDITIONS if n not in head]
-    fill = [n for n in R8_STALE_FILL if n not in consumed and n not in head]
-    return tuple((head + fill)[:DRIVER_WINDOW])
-
-
-# The r8-pool leftover after the r17 fill — scheduled at the head of
-# the r18 window (VERDICT r16 "Next round" #2) so the last
-# 8-round-old evidence is gone within two rounds. Derived, not typed:
-# tests/test_registry_rotation.py recomputes it from the artifacts.
-def _r18_stale_head() -> tuple[str, ...]:
-    consumed = set(_r15_front()) | set(_r16_front()) | set(_r17_front())
-    return tuple(n for n in R8_STALE_FILL if n not in consumed)
-
-
-R18_STALE_HEAD: tuple[str, ...] = _r18_stale_head()
-
-
-# Round-17 additions: zero driver rows by definition; they queue
-# behind the r18 stale head via certification_order().
-R17_ADDITIONS: tuple[str, ...] = (
-    "sim_eval_ndcg_mrr",
-    "docs_annotator_kappa",
-    "docs_distinct_ngrams",
-    "sim_eval_hard_negatives",
-    "docs_nb_quality_auc",
-    "streaming_dedup_within_watermark",
-    "docs_doremi_mixture",
-)
-
-# Queries whose code (or a helper in their reference closure) changed
-# in round 17 AFTER the round-16 snapshot their evidence stands on.
-# Unlike r15/r16, this list is no longer hand-derived: the
-# QUERY_FINGERPRINTS.json ledger was bootstrapped at the exact commit
-# the r16 driver certified (22a1fc2), and tests/test_stale_by_code.py
-# FAILS if any query's HEAD fingerprint drifts from the ledger without
-# appearing here (or already holding an r17-window seat). Members
-# queue for the r18 window behind R18_STALE_HEAD.
-#
-# Current members were staled by the round-17 ADVICE fixes: the
-# materialize_result limit-probe rewrite (agg_hll_sketch_persist,
-# layout_compaction_roundtrip, join_aqe_skew_split, scan_orc_roundtrip,
-# scan_binaryfile_manifest, scan_partition_pruning_static) and the
-# rest_source.register() conf-side-effect fix (every rest_* query not
-# already holding an r17 seat). The detector surfaced all ten
-# mechanically; none were hand-derived.
-R17_REWRITTEN_RECERTS: tuple[str, ...] = (
-    "agg_hll_sketch_persist",
-    "join_aqe_skew_split",
-    "layout_compaction_roundtrip",
-    "rest_config_fanout_probe",
-    "rest_roundtrip_events",
-    "rest_scan_events",
-    "rest_stream_events",
-    "scan_binaryfile_manifest",
-    "scan_orc_roundtrip",
-    "scan_partition_pruning_static",
-    # Staled by the round-17 cosine_topk_bruteforce Arrow-kernel swap
-    # (the 4.8x brute-force-tier speedup). Surfaced by the upgraded
-    # detector: sim_knn_loo_eval reaches the kernel through a CLOSURE
-    # CELL (it is defined inside a _register_* wrapper) and
-    # sim_recall_ivf_vs_exact through a DYNAMIC QUERIES["..."] lookup —
-    # the two resolution paths the first-cut tracker missed.
-    "sim_topk_bruteforce",
-    "sim_knn_loo_eval",
-    "sim_recall_ivf_vs_exact",
-    # Staled by extending the Arrow-kernel swap to every remaining
-    # pair-scoring fold (SQ8/PQ exact rescores, the bounded all-pairs
-    # ground truth, nearest-centroid scoring, and the k-means Lloyd
-    # assign, which gained an exact-int squared-L2 kernel). The two PQ
-    # top-k queries drifted too but already hold r17-window seats.
-    "sim_topk_sq8",
-    "sim_topk_ivf_sq8",
-    "sim_nearest_centroid",
-    "dedup_embedding_cosine",
-    "dedup_semantic_kmeans",
-    # Staled by extracting the shared _nb_scored helper (the held-out
-    # score table now feeding both the confusion matrix and the new
-    # docs_nb_quality_auc) — mechanically identical output, but the
-    # discipline is evidence-based.
-    "docs_nb_quality_classifier",
-)
-
-
-# ---------------------------------------------------------------------------
-# Round-18 rotation (VERDICT r17 "Next round" #1). CORRECTNESS_r17
-# certified exactly _r17_front() 50/50 green — flipping every r16
-# "local-only" query to driver-certified, re-certifying the 9
-# stale-by-code R16_REWRITTEN_RECERTS, and consuming 30 r8-pool
-# backfills. The r18 window pins the 37-query priority head — the 11
-# R18_STALE_HEAD (the r8-pool leftover: the last queries anywhere with
-# 8-round-old evidence), the 19 stale-by-code R17_REWRITTEN_RECERTS
-# (current-code rows for the Arrow-kernel-swapped sim family and the
-# ADVICE-r17 fix closures), and the 7 never-certified R17_ADDITIONS —
-# then backfills its 13 remaining slots from the 49-query r9-evidence
-# pool (after r17, the oldest evidence anywhere) in registration
-# order. The 30 pool queries that do not fit are staged as
-# R19_STALE_POOL, scheduled across the r19/r20 windows so the r9 pool
-# provably drains to zero, exactly as the r8 pool did. Derivations
-# recomputed from CORRECTNESS_r01–r17 by
-# tests/test_registry_rotation.py.
-# ---------------------------------------------------------------------------
-
-# Queries whose newest green driver row is round 9 (recomputed from
-# the artifacts by tests/test_registry_rotation.py), in registration
-# order. Six of them double as R17_REWRITTEN_RECERTS members and ride
-# the recert head instead of the fill.
-R9_STALE_FILL: tuple[str, ...] = (
-    "cdc_scd2_history",
-    "join_skew_salted",
-    "agg_approx_quantiles",
-    "agg_hll_sketch_merge",
-    "agg_heavy_hitters",
-    "join_lateral_topk",
-    "dedup_minhash_incremental",
-    "dedup_clusters",
-    "sim_topk_lsh",
-    "sim_topk_ivf_sq8",
-    "emb_covariance",
-    "multimodal_resize",
-    "docs_decontaminate_lsh",
-    "docs_stratified_sample",
-    "docs_chunk_overlap",
-    "docs_pack_sequences",
-    "docs_quality_topfrac_by_lang",
-    "emb_label_centroids",
-    "sim_nearest_centroid",
-    "dedup_embedding_clusters",
-    "docs_ngram_topk",
-    "pipeline_training_data_v2",
-    "text_pii_redact",
-    "docs_balance_strata",
-    "docs_weighted_sample",
-    "sim_topk_sq8",
-    "multimodal_ahash",
-    "docs_tfidf_topterms",
-    "docs_epoch_mixture",
-    "join_range_binned",
-    "join_asof_forward",
-    "join_asof_nearest",
-    "agg_approx_distinct",
-    "profile_orders",
-    "funnel_view_click_purchase",
-    "cohort_retention_weekly",
-    "events_gapfill_hourly",
-    "events_anomaly_zscore",
-    "events_gapfill_locf",
-    "events_rollup_multires",
-    "rest_scan_events",
-    "rest_stream_events",
-    "rest_roundtrip_events",
-    "kafka_file_roundtrip",
-    "transform_smt_chain",
-    "streaming_stream_stream_join",
-    "streaming_stream_stream_left_join",
-    "streaming_dedup_then_window",
-    "udf_pandas_grouped_agg",
-)
-
-
-def _r18_front() -> tuple[str, ...]:
-    head = list(R18_STALE_HEAD)
-    head += [n for n in R17_REWRITTEN_RECERTS if n not in head]
-    head += [n for n in R17_ADDITIONS if n not in head]
-    fill = [n for n in R9_STALE_FILL if n not in head]
-    return tuple((head + fill)[:DRIVER_WINDOW])
-
-
-# The r9-pool leftover after the r18 fill — pinned at the head of the
-# r19 queue (VERDICT r17 "Next round" #4): 30 queries, so r19's window
-# consumes all of them with 20 slots left for r18 stale-by-code
-# re-certs and additions. The r9 pool is gone by r19, one round ahead
-# of the two-round schedule ledgered in COVERAGE.md.
-R19_STALE_POOL: tuple[str, ...] = tuple(
-    n for n in R9_STALE_FILL if n not in _r18_front()
-)
-
-
-# Round-18 additions: zero driver rows by definition; they queue
-# behind R19_STALE_POOL via certification_order().
-R18_ADDITIONS: tuple[str, ...] = (
-    "docs_dedup_impact_report",
-    "docs_pii_prevalence",
-    "docs_nb_threshold_sweep",
-    "emb_quantization_error",
-)
-
-# Queries whose code (or a helper in their reference closure) changed
-# in round 18 AFTER the round-17 evidence stamped in
-# QUERY_FINGERPRINTS.json. Derived mechanically: after any source
-# change, `python tools/fingerprints.py check` lists the drifted
-# queries, and tests/test_stale_by_code.py FAILS unless each one holds
-# an r18-window seat or appears here. Members queue for the r19 window
-# behind R19_STALE_POOL.
-#
-# Current members were staled by the round-18 ADVICE fix hardening the
-# Arrow pair-cosine kernel (null/zero-norm pairs now score SQL NULL
-# like the DuckDB oracle instead of crashing/NaN): the detector
-# surfaced every kernel consumer; all but these two already hold r18
-# seats (window or R19_STALE_POOL).
-R18_REWRITTEN_RECERTS: tuple[str, ...] = (
-    "dedup_embedding_lsh",
-    "sim_topk_ivf",
-    # Staled by the round-18 optimization batch 1 (single-derivation
-    # restructures: shared checkpointed shingle/edge/LM relations,
-    # explode-instead-of-unionAll symmetrizations, sufficient-statistic
-    # aggregates for Fellegi-Sunter/Theil-Sen/assortativity/bigram
-    # rarity). Every member re-verified against its DuckDB oracle at
-    # sf0.01 this round (tools/parity_check.py, 25/25 green) before the
-    # batch was committed; the driver rows queue here for r19. The
-    # other batch-1 queries (dedup_clusters, dedup_embedding_clusters,
-    # dedup_split_leakage, dedup_semantic_kmeans, docs_doremi_mixture,
-    # docs_nb_quality_auc, graph_triangles) already hold r18-window or
-    # pool seats.
-    "basket_brand_affinity",
-    "dedup_ngram_containment",
-    "dedup_ngram_jaccard",
-    "docs_ccnet_buckets",
-    "docs_char_bigram_rarity",
-    "docs_dsir_importance",
-    "docs_textrank_keywords",
-    "docs_wordlm_xent",
-    "er_fellegi_sunter",
-    "graph_assortativity",
-    "graph_bfs_levels",
-    "graph_communities_lpa",
-    "graph_kcore",
-    "graph_linkpred",
-    "layout_zorder_pruning_stats",
-    "orders_theil_sen",
-    "pipeline_stage_funnel",
-    "sim_mutual_knn",
-    # Staled by the round-18 optimization batch 2 (shared quantized-
-    # corpus checkpoint threaded through the sim family's operators via
-    # quantized=True; shared-pass multi-quantile descent; boilerplate
-    # shingle-relation checkpoint) — parity-gated 18/18 green at sf0.01
-    # before commit. The other batch-2 members already hold r18 seats.
-    "agg_quantiles_distributed",
-    "docs_boilerplate_fraction",
-    "sim_mmr_rerank",
-    "sim_topk_ivf_pq",
-    "sim_topk_pq",
-    # Staled by the round-18 optimization batch 3 (single-derivation
-    # restructures for the remaining multi-consumer plans: banded
-    # self-join operators now materialize their fingerprint relation
-    # once; iterative PageRank checkpoints node-sized state per round;
-    # the conformal/binseg/NB/MDL/WordPiece/collocation/Good-Turing/
-    # novelty/bridge/MAD/backlog/attribution/matryoshka/referential
-    # query bodies materialize shared subtrees once — plus the
-    # matryoshka one-pass segment-dot and the per-child-table FK-audit
-    # fusion, both exact-integer-equivalent). Every member parity-gated
-    # at sf0.01 before commit (31/31 green incl. seat-holding
-    # consumers); driver rows queue for r19.
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_verbatim_spans",
-    "docs_collocations_lift",
-    "docs_good_turing",
-    "docs_ngram_novelty_curve",
-    "docs_unigram_mdl",
-    "docs_wordpiece_fertility",
-    "dq_referential_orphans",
-    "emb_matryoshka_recall",
-    "events_binseg_changepoints",
-    "events_mad_anomaly",
-    "graph_pagerank",
-    "orders_conformal_interval",
-    "orders_open_backlog",
-    "orders_revenue_bridge",
-    "pipeline_training_data",
-    # Batch-3 continuation: the KMV sketch's distinct pair relation and
-    # <=2k-row sketch now materialize once (were derived 4x / 3x).
-    # Parity-gated at sf0.01 before commit.
-    "agg_kmv_set_sketch",
-    # Round-19 tracer upgrade (ADVICE r18 low + medium): the detector
-    # now resolves function-local imports (`from ..operators.x import
-    # helper` inside a query body) and the `_QQ` registry alias, which
-    # surfaced six r18-optimized queries whose stale-by-code drift the
-    # old tracer could not see (their operators/components changed in
-    # r18 batches; the queries themselves held no seat). All six were
-    # parity-gated at sf0.01 with their batches before commit; the
-    # driver rows queue here. The other three ADVICE-named queries
-    # (docs_decontamination_report, sim_hybrid_rrf after the _QQ fix,
-    # and docs_neardup_overlap_matrix's sibling) were adjudicated by
-    # diffing their full new-tracer closure blobs between the evidence
-    # commit and HEAD: byte-identical, so their evidence stands.
-    "dedup_lsh_recall_report",
-    "dedup_split_leakage",
-    "docs_neardup_overlap_matrix",
-    "graph_triangles",
-    "multimodal_ahash_neardup",
-    "multimodal_phash_neardup",
-)
-
-
-# Queries whose code changed in round 19 (the second optimization
-# round) AFTER the round-18 evidence in QUERY_FINGERPRINTS.json.
-# Derived mechanically (tools/fingerprints.py check) after each r19
-# optimization batch; every member is parity-gated at sf0.01 (and the
-# restructure pinned by a focused test in tests/test_r19_optim.py)
-# before its commit. Members are pinned INTO the r19 window by
-# _r19_front() below — their new code gets driver rows this round.
-R19_REWRITTEN_RECERTS: tuple[str, ...] = (
-    # Lloyd assignment is a pure map over a broadcast centroid-array
-    # row (was: k-fanout crossJoin + vec_id-partitioned rank-1 window
-    # = one full-corpus shuffle per round); seed ranks from one
-    # sorted-collect; per-round checkpoint moved to the 1-row cs
-    # relation.
-    "dedup_semantic_kmeans",
-    # pagerank() gained collapse_multiedges (TextRank's co-occurrence
-    # multigraph pre-aggregates to (src, dst, w) once; iterations run
-    # distinct-pair-sized, contributions scaled by w — exactly equal
-    # by distributivity). graph_pagerank's plan is byte-unchanged
-    # (flag off) but its fingerprint covers the operator source; both
-    # already queued in R18_REWRITTEN_RECERTS, listed here because the
-    # r19 diff touches them again.
-    "docs_textrank_keywords",
-    "graph_pagerank",
-)
-
-
-CERTIFICATION_FRONT: tuple[str, ...] = _r18_front()
-
-
-def certification_order() -> list[str]:
-    """Registry names with CERTIFICATION_FRONT pinned to the front.
-
-    The r19 window head is already staged directly behind it: the
-    r9-evidence pool leftover that did not fit the r18 fill
-    (R19_STALE_POOL — after r18, the oldest evidence anywhere), then
-    this round's stale-by-code re-certs and never-certified additions;
-    everything else follows in registration order.
+    Pending queries — ledger row flagged ``drifted``, or no ledger row at
+    all — lead; within each group the oldest ``evidence_round`` goes first
+    (no round counts as 0); ties keep registration order. Re-stamping a
+    certified window moves it to the back, so the window rotates without
+    a per-round edit. ``ledger`` defaults to the committed file.
     """
-    front = [n for n in CERTIFICATION_FRONT if n in QUERIES]
-    next_up: list[str] = []
-    for n in (
-        *R19_REWRITTEN_RECERTS,
-        *R19_STALE_POOL,
-        *R18_REWRITTEN_RECERTS,
-        *R18_ADDITIONS,
-        *R18_STALE_HEAD,
-        *R17_REWRITTEN_RECERTS,
-        *R17_ADDITIONS,
-        *R16_REWRITTEN_RECERTS,
-        *R15_ADDITIONS,
-        *R8_STALE_FILL,
-        *R16_ADDITIONS,
-    ):
-        # dedup: a stale-by-code re-cert may also sit in an older pool
-        if n in QUERIES and n not in front and n not in next_up:
-            next_up.append(n)
-    pinned = set(front) | set(next_up)
-    return front + next_up + [n for n in QUERIES if n not in pinned]
+    ledger = load_ledger() if ledger is None else ledger
+    index = {name: i for i, name in enumerate(QUERIES)}
+
+    def key(name: str) -> tuple[bool, int, int]:
+        row = ledger.get(name)
+        pending = row is None or bool(row.get("drifted"))
+        return (not pending, (row or {}).get("evidence_round") or 0, index[name])
+
+    return sorted(QUERIES, key=key)
 
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):

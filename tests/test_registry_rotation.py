@@ -1,236 +1,206 @@
-"""Guard the driver-certification rotation (round 18).
+"""Check the computed driver-certification rotation against the driver's
+own history.
 
-The driver hash-checks only the FIRST 50 entries of the exposed query
-dict per round. CORRECTNESS_r17 certified exactly ``_r17_front()``
-50/50 green — consuming the 9 stale-by-code R16_REWRITTEN_RECERTS, the
-11 never-certified R16_ADDITIONS, and 30 r8-pool backfills. The r18
-front pins the 37-query priority head — the 11 R18_STALE_HEAD (the
-r8-pool leftover: the last queries anywhere with 8-round-old
-evidence), the 19 stale-by-code R17_REWRITTEN_RECERTS, and the 7
-never-certified R17_ADDITIONS — then backfills its 13 remaining slots
-from the 49-query r9-evidence pool. The 30 pool queries that do not
-fit are pinned as R19_STALE_POOL so the r9 pool provably drains to
-zero next round. Every pool is recomputed here from the artifact
-files so the pin cannot drift.
+The driver hash-checks only the FIRST ``DRIVER_WINDOW`` entries of the
+exposed query dict per round, and ``certification_order()`` computes
+that order from the fingerprint ledger (pending first, then the oldest
+evidence, then registration order). These tests replay the rule on
+ledgers rebuilt from the ``CORRECTNESS_rNN.json`` artifacts and check
+the committed window: the oldest evidence pools (round 8, then round 9)
+must drain, never-certified and drifted queries must head the window,
+and the window must not repeat the last driver windows.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
+import sys
 
 import __spark_entry__  # noqa: F401  (registers every query)
 from mk_kafka_connect_spark.plans.registry import (
-    CERTIFICATION_FRONT,
     DRIVER_WINDOW,
     QUERIES,
-    R8_STALE_FILL,
-    R9_STALE_FILL,
-    R17_ADDITIONS,
-    R17_REWRITTEN_RECERTS,
-    R18_ADDITIONS,
-    R18_REWRITTEN_RECERTS,
-    R18_STALE_HEAD,
-    R19_STALE_POOL,
-    _r17_front,
     certification_order,
+    load_ledger,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
-# Artifacts that existed when the r18 front was pinned (r1..r17; the r7
-# and r12 drivers never ran, so those files are legitimately absent).
-# Later rounds append artifacts; the derivation stays frozen on this
-# evidence.
-_PRE_R18_ARTIFACTS = tuple(
-    f"CORRECTNESS_r{n:02d}.json" for n in range(1, 18)
-)
+import fingerprints  # noqa: E402
 
 
-def _latest_green_round() -> dict[str, int]:
+def _artifact(rnd: int) -> dict[str, dict]:
+    with open(os.path.join(REPO, f"CORRECTNESS_r{rnd:02d}.json")) as f:
+        return json.load(f)
+
+
+def _latest_green_round(last: int | None = None) -> dict[str, int]:
+    """Newest green driver round per query, over artifacts up to ``last``."""
     latest: dict[str, int] = {}
-    for fname in _PRE_R18_ARTIFACTS:
-        path = os.path.join(REPO, fname)
-        if not os.path.exists(path):
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"r(\d+)\.json$", path).group(1))
+        if last is not None and rnd > last:
             continue
-        rnd = int(re.search(r"r(\d+)", fname).group(1))
         with open(path) as f:
             rows = json.load(f)
         for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = (
-                row.get("rows_match")
-                and row.get("schema_match") is not False
-                and row.get("hash_match") in (True, None)
-                and not row.get("err")
-            )
-            if ok:
+            if fingerprints._green(row):
                 latest[name] = max(latest.get(name, 0), rnd)
     return latest
 
 
-def test_r17_window_matches_r17_front():
-    # The premise of the rotation: the r17 driver certified exactly the
-    # pinned _r17_front() set, all green.
-    path = os.path.join(REPO, "CORRECTNESS_r17.json")
-    with open(path) as f:
-        rows = json.load(f)
-    assert set(rows) == set(_r17_front())
-    bad = {
-        n: r
-        for n, r in rows.items()
-        if not (r.get("rows_match") and r.get("schema_match") and not r.get("err"))
+def _rebuilt_ledger(last: int) -> dict[str, dict]:
+    """The drift-free ledger a refresh after round ``last`` would hold."""
+    return {
+        n: {"fingerprint": "x", "evidence_round": r}
+        for n, r in _latest_green_round(last).items()
+        if n in QUERIES
     }
-    assert not bad, f"r17 rows not green: {sorted(bad)}"
+
+
+def _pending(ledger: dict[str, dict]) -> list[str]:
+    return [n for n in QUERIES if n not in ledger or ledger[n].get("drifted")]
+
+
+def test_r17_window_matches_r17_front():
+    # The r17 driver certified a full window of registered queries, all
+    # green, and the ledger carries that evidence (round 17 or newer).
+    rows = _artifact(17)
+    assert len(rows) == DRIVER_WINDOW
+    assert set(rows) <= set(QUERIES)
+    bad = sorted(n for n, r in rows.items() if not fingerprints._green(r))
+    assert not bad, f"r17 rows not green: {bad}"
+    ledger = load_ledger()
+    unstamped = sorted(n for n in rows if ledger[n]["evidence_round"] < 17)
+    assert not unstamped, f"r17 evidence never refreshed into the ledger: {unstamped}"
 
 
 def test_orphan_pool_is_exactly_r17_additions():
-    # The only queries with no driver row ever are the 7 round-17
-    # additions (plus this round's own additions, queued for r19); the
-    # r18 head carries every one of them.
+    # Queries no driver round ever certified green are exactly the
+    # unledgered ones, and the committed window seats every one of them.
     latest = _latest_green_round()
+    ledger = load_ledger()
     orphans = [n for n in QUERIES if n not in latest]
-    expected = list(R17_ADDITIONS) + list(R18_ADDITIONS)
-    assert sorted(orphans) == sorted(expected), (
-        f"orphan pool drifted from evidence: "
-        f"missing={sorted(set(orphans) - set(expected))} "
-        f"extra={sorted(set(expected) - set(orphans))}"
-    )
-    assert set(R17_ADDITIONS) <= set(CERTIFICATION_FRONT)
+    assert orphans == [n for n in QUERIES if n not in ledger]
+    front = certification_order()[:DRIVER_WINDOW]
+    if len(_pending(ledger)) <= DRIVER_WINDOW:
+        assert set(orphans) <= set(front)
+    else:
+        assert set(front) <= set(_pending(ledger))
 
 
 def test_r8_pool_leftover_is_exactly_r18_stale_head():
-    # After the r17 fill consumed 30, the queries whose newest green
-    # row is still round 8 are exactly the 11-query R18_STALE_HEAD —
-    # the r18 window retires the last 8-round-old evidence.
-    latest = _latest_green_round()
-    r8 = [n for n in QUERIES if latest.get(n) == 8]
-    assert r8 == list(R18_STALE_HEAD), (
-        f"r8 leftover pool drifted from evidence: "
-        f"missing={sorted(set(r8) - set(R18_STALE_HEAD))} "
-        f"extra={sorted(set(R18_STALE_HEAD) - set(r8))}"
-    )
+    # Before round 18 the oldest evidence was round 8, held by 11
+    # queries. The r18 driver certified all 11, and the rule replayed on
+    # the ledger rebuilt from r1..r17 seats all 11 in its first window.
+    r8 = [n for n in QUERIES if _latest_green_round(17).get(n) == 8]
     assert len(r8) == 11
-    assert set(R18_STALE_HEAD) <= set(CERTIFICATION_FRONT)
+    rows = _artifact(18)
+    assert all(n in rows and fingerprints._green(rows[n]) for n in r8)
+    window = certification_order(_rebuilt_ledger(17))[:DRIVER_WINDOW]
+    assert set(r8) <= set(window)
 
 
 def test_r9_pool_matches_artifacts():
-    # R9_STALE_FILL is exactly the queries whose newest green row is
-    # round 9 — after r17 consumed the r8 backfills, the oldest
-    # evidence anywhere — in registration order.
+    # The ledger's round-9 rows are exactly the queries whose newest
+    # green driver row is round 9; after round 19 there were 30.
     latest = _latest_green_round()
+    ledger = load_ledger()
     r9 = [n for n in QUERIES if latest.get(n) == 9]
-    assert r9 == list(R9_STALE_FILL), (
-        f"r9 pool drifted from evidence: "
-        f"missing={sorted(set(r9) - set(R9_STALE_FILL))} "
-        f"extra={sorted(set(R9_STALE_FILL) - set(r9))}"
-    )
-    assert len(r9) == 49
+    assert r9 == [n for n in QUERIES if ledger.get(n, {}).get("evidence_round") == 9]
+    assert len([n for n in QUERIES if _latest_green_round(19).get(n) == 9]) == 30
 
 
 def test_front_is_priority_head_then_r9_fill():
-    head = list(R18_STALE_HEAD)
-    head += [n for n in R17_REWRITTEN_RECERTS if n not in head]
-    head += [n for n in R17_ADDITIONS if n not in head]
-    assert len(head) == 37
-    fill = [n for n in R9_STALE_FILL if n not in head]
-    expected = tuple((head + fill)[:DRIVER_WINDOW])
-    assert CERTIFICATION_FRONT == expected
-    # The priority head must never be displaced by fill.
-    assert list(CERTIFICATION_FRONT[: len(head)]) == head
+    # The window is the pending head, then fill with the oldest evidence:
+    # no query left out of the window is pending while a fill query sits
+    # in it, or holds older evidence than any fill query.
+    ledger = load_ledger()
+    pending = set(_pending(ledger))
+    order = certification_order()
+    front, rest = order[:DRIVER_WINDOW], order[DRIVER_WINDOW:]
+    head = [n for n in front if n in pending]
+    assert front[: len(head)] == head, "fill query seated ahead of a pending one"
+    fill = front[len(head):]
+    if fill:
+        assert not pending & set(rest), "pending query left out while fill is seated"
+        newest_fill = max(ledger[n]["evidence_round"] for n in fill)
+        oldest_rest = min(ledger[n]["evidence_round"] for n in rest)
+        assert newest_fill <= oldest_rest
 
 
 def test_front_fills_driver_window_exactly():
-    # A short front silently promotes registration-order filler into the
-    # window; a long front silently drops its own tail. Pin it to 50.
-    assert len(CERTIFICATION_FRONT) == DRIVER_WINDOW
-    assert len(set(CERTIFICATION_FRONT)) == DRIVER_WINDOW
-    dangling = [n for n in CERTIFICATION_FRONT if n not in QUERIES]
-    assert not dangling, f"front names not in registry: {dangling}"
-    dangling = [
-        n
-        for n in (
-            *R17_ADDITIONS,
-            *R17_REWRITTEN_RECERTS,
-            *R18_STALE_HEAD,
-            *R9_STALE_FILL,
-            *R19_STALE_POOL,
-        )
-        if n not in QUERIES
-    ]
-    assert not dangling, f"pinned names not in registry: {dangling}"
+    # However short the ledger, the window is DRIVER_WINDOW distinct
+    # registered queries: an empty ledger, the committed one, and one
+    # with every query already stamped.
+    stamped = {n: {"fingerprint": "x", "evidence_round": 19} for n in QUERIES}
+    for ledger in ({}, load_ledger(), stamped):
+        front = certification_order(ledger)[:DRIVER_WINDOW]
+        assert len(front) == len(set(front)) == DRIVER_WINDOW
+        assert set(front) <= set(QUERIES)
 
 
 def test_front_differs_from_r17_window():
-    # The r5/r6 (and again r11) failure mode: two rounds burned the
-    # driver window on the same 50 names. Nothing in the r18 window may
-    # repeat the r17 window — the 19 stale-by-code re-certs were staled
-    # by post-window code changes and hold zero r17 seats by
-    # construction (tools/fingerprints.py refresh consumed the seated
-    # ones).
-    repeats = set(_r17_front()) & set(CERTIFICATION_FRONT)
-    assert not repeats, (
-        f"r18 front repeats r17 window: {sorted(repeats)}"
+    # The r5/r6, r11 and r19 failure mode: two rounds burning the window
+    # on the same names. The committed window may repeat a name from the
+    # r17 window or the newest driver window only if its code drifted
+    # since.
+    ledger = load_ledger()
+    newest = max(
+        int(re.search(r"r(\d+)\.json$", p).group(1))
+        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
     )
+    recent = set(_artifact(17)) | set(_artifact(newest))
+    front = certification_order()[:DRIVER_WINDOW]
+    repeats = sorted(n for n in recent & set(front) if not ledger[n].get("drifted"))
+    assert not repeats, f"window repeats undrifted names from a recent window: {repeats}"
 
 
 def test_r19_stale_pool_drains_the_r9_pool():
-    # R19_STALE_POOL must be exactly the r9-pool queries the r18
-    # window does not consume — 30 queries, all scheduled for the r19
-    # window head so the r9 pool is gone next round (VERDICT r17 #4).
-    expected = tuple(
-        n for n in R9_STALE_FILL if n not in set(CERTIFICATION_FRONT)
-    )
-    assert R19_STALE_POOL == expected
-    assert len(R19_STALE_POOL) == 30
-    latest = _latest_green_round()
-    for n in R19_STALE_POOL:
-        assert latest.get(n) == 9
-
-
-def test_stale_overflow_queues_directly_behind_window():
-    # r19 priority: the r9-pool leftover first, then this round's
-    # stale-by-code re-certs, then its never-certified additions.
-    order = certification_order()
-    front = set(CERTIFICATION_FRONT)
-    overflow: list[str] = []
-    for n in (*R19_STALE_POOL, *R18_REWRITTEN_RECERTS, *R18_ADDITIONS):
-        if n in QUERIES and n not in front and n not in overflow:
-            overflow.append(n)
-    behind = order[DRIVER_WINDOW : DRIVER_WINDOW + len(overflow)]
-    assert behind == overflow, "stale overflow must head the r19 queue"
+    # Replayed on the ledger rebuilt from r1..r19, the first window seats
+    # the whole round-9 pool; re-stamping it leaves no round-9 evidence.
+    ledger = _rebuilt_ledger(19)
+    r9 = {n for n, row in ledger.items() if row["evidence_round"] == 9}
+    assert len(r9) == 30
+    window = certification_order(ledger)[:DRIVER_WINDOW]
+    assert r9 <= set(window)
+    for n in window:
+        ledger[n] = {"fingerprint": "x", "evidence_round": 20}
+    assert not [n for n, row in ledger.items() if row["evidence_round"] <= 9]
 
 
 def test_r17_rewritten_recerts_have_older_rows_and_ride_the_window():
-    # Membership criterion: a driver row exists, but round-17 code
-    # changes touched the query (or a helper it calls) after it. The
-    # set is derived mechanically by tests/test_stale_by_code.py from
-    # the QUERY_FINGERPRINTS.json ledger; here we pin that every
-    # member has prior evidence and a seat in the window.
+    # A drifted row has an older green driver row behind it (else it
+    # belongs with the never-ledgered), and every drifted query is
+    # ordered ahead of every settled one.
     latest = _latest_green_round()
-    for n in R17_REWRITTEN_RECERTS:
-        assert n in QUERIES
-        assert n in set(CERTIFICATION_FRONT)
-        assert latest.get(n), f"{n} has no driver row — belongs in additions"
+    ledger = load_ledger()
+    drifted = [n for n in QUERIES if ledger.get(n, {}).get("drifted")]
+    for n in drifted:
+        assert latest.get(n) == ledger[n]["evidence_round"], f"{n} has no driver row"
+    order = certification_order()
+    settled = [i for i, n in enumerate(order) if n not in set(_pending(ledger))]
+    if drifted and settled:
+        assert max(order.index(n) for n in drifted) < min(settled)
 
 
 def test_r8_pool_retired():
-    # After the r18 pin, every R8_STALE_FILL member either holds newer
-    # evidence (r16/r17 fills) or a seat in the r18 window — no query
-    # with 8-round-old evidence survives the round.
+    # No registered query's newest green driver row is round 8 or older,
+    # in the artifacts or in the ledger.
     latest = _latest_green_round()
-    stranded = [
-        n
-        for n in R8_STALE_FILL
-        if latest.get(n) == 8 and n not in set(CERTIFICATION_FRONT)
-    ]
-    assert not stranded, f"r8-era evidence with no r18 seat: {stranded}"
+    ledger = load_ledger()
+    stranded = [n for n in QUERIES if n in latest and latest[n] <= 8]
+    assert not stranded, f"r8-era evidence survives: {stranded}"
+    assert all(row["evidence_round"] > 8 for row in ledger.values())
 
 
 def test_window_queries_all_have_oracles():
-    # Every r18 window query claims a full DuckDB value-hash oracle —
-    # a rows-only driver row would not discharge the certification debt.
-    missing = [n for n in CERTIFICATION_FRONT if QUERIES[n].oracle is None]
+    # Every committed window query claims a full DuckDB value-hash
+    # oracle; a rows-only driver row would not discharge the evidence debt.
+    front = certification_order()[:DRIVER_WINDOW]
+    missing = [n for n in front if QUERIES[n].oracle is None]
     assert not missing, f"window queries without oracle SQL: {missing}"

@@ -1,46 +1,35 @@
-"""Mechanical stale-by-code guard (ADVICE r16, medium).
+"""Mechanical stale-by-code guard and the fingerprint ledger's invariants.
 
-Round 16's hand-typed recert list both included a query the diff never
-touched and omitted one it did. This test makes that class of error
-impossible going forward: ``QUERY_FINGERPRINTS.json`` holds, for every
-registered query, the SHA-256 of its source closure (the query
-function, its ``@query`` decorator text — hence oracle SQL and tags —
-and transitively every in-package function/class it references, so a
-shared-helper edit like round 16's ``materialize_result`` swap is
-caught even when the query body is untouched).
+``QUERY_FINGERPRINTS.json`` holds, for every registered query, the
+SHA-256 of its source closure (the query function, its ``@query``
+decorator text — hence oracle SQL and tags — and transitively every
+in-package function/class it references, so a shared-helper edit is
+caught even when the query body is untouched) as certified by its
+newest green driver row, plus that row's round.
 
-The ledger was bootstrapped at commit 22a1fc2 — the exact code the r16
-driver certified — and re-stamped each round from the new CORRECTNESS
-artifact (r17: the 50-query window, refreshed at the unchanged
-end-of-r17 code the driver ran). Any
-query whose HEAD fingerprint differs from its ledgered one has
-certification evidence from older code and MUST hold a pending
-re-certification seat: the r18 window (CERTIFICATION_FRONT), the
-staged r19 queue (R19_STALE_POOL), this round's derived recert list
-(R18_REWRITTEN_RECERTS), or — for brand-new queries — R18_ADDITIONS.
-Forgetting to queue a touched query now fails CI instead of waiting
-for a judge to notice.
+``certification_order()`` reads the ledger without tracing anything, so
+two stored facts must stay true, and these tests fail when they do not:
 
-End-of-round, ``python tools/fingerprints.py refresh`` re-stamps the
-queries the new CORRECTNESS artifact certified (and the bootstrap rule
-re-runs after the round's strict-parity gate).
+- the ``drifted`` flags equal the drift measured at HEAD (after a code
+  change, ``python tools/fingerprints.py mark-drift`` rewrites them);
+- every ``evidence_round`` is the newest green row across
+  ``CORRECTNESS_r*.json`` (after a driver round,
+  ``python tools/fingerprints.py refresh`` re-stamps what it certified).
+  A forgotten refresh therefore fails here instead of stalling the
+  driver window.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
 import os
+import re
 import sys
 
 import __spark_entry__  # noqa: F401  (registers every query)
-from mk_kafka_connect_spark.plans.registry import (
-    CERTIFICATION_FRONT,
-    QUERIES,
-    R17_ADDITIONS,
-    R18_ADDITIONS,
-    R18_REWRITTEN_RECERTS,
-    R19_REWRITTEN_RECERTS,
-    R19_STALE_POOL,
-)
+from mk_kafka_connect_spark.plans.registry import QUERIES, certification_order
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
@@ -48,51 +37,136 @@ sys.path.insert(0, os.path.join(REPO, "tools"))
 import fingerprints  # noqa: E402
 
 
-def test_ledger_covers_every_query():
+def _newest_green_round() -> dict[str, int]:
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if fingerprints._green(row):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
+
+
+@functools.lru_cache(maxsize=1)
+def _measured_drift() -> dict[str, dict]:
+    # Tracing every closure takes seconds; measure HEAD once per session.
+    return fingerprints.drifted(fingerprints.load_ledger())
+
+
+def _pending_head() -> list[str]:
+    """The leading run of certification_order() that the ledger marks
+    pending (drifted flag or no row)."""
     ledger = fingerprints.load_ledger()
-    assert ledger, "QUERY_FINGERPRINTS.json missing — run fingerprints.py bootstrap"
-    unledgered = [
-        n
-        for n in QUERIES
-        if n not in ledger
-        and n not in set(R17_ADDITIONS)
-        and n not in set(R18_ADDITIONS)
-    ]
+    head = []
+    for name in certification_order(ledger):
+        if name in ledger and not ledger[name].get("drifted"):
+            break
+        head.append(name)
+    return head
+
+
+def test_ledger_covers_every_query():
+    # A query missing from the ledger must be one no driver round ever
+    # certified green; otherwise an end-of-round refresh was skipped.
+    ledger = fingerprints.load_ledger()
+    assert ledger, "QUERY_FINGERPRINTS.json missing"
+    latest = _newest_green_round()
+    unledgered = [n for n in QUERIES if n not in ledger and n in latest]
     assert not unledgered, (
-        f"queries with no ledgered fingerprint and no addition seat: "
-        f"{unledgered}"
+        f"queries with a green driver row but no ledger row: {unledgered}"
     )
 
 
 def test_drifted_queries_hold_a_pending_recert_seat():
-    pending = (
-        set(CERTIFICATION_FRONT)
-        | set(R19_STALE_POOL)
-        | set(R18_REWRITTEN_RECERTS)
-        | set(R19_REWRITTEN_RECERTS)
-        | set(R18_ADDITIONS)
-    )
-    stranded = {
-        name: row["reason"]
-        for name, row in fingerprints.drifted().items()
-        if name not in pending
-    }
+    # Every query whose HEAD code differs from its certified code (or
+    # that was never certified) sits in the pending head of the order,
+    # ahead of every query with current evidence.
+    stranded = sorted(set(_measured_drift()) - set(_pending_head()))
     assert not stranded, (
         "stale-by-code queries with no pending re-certification seat "
-        f"(add them to R18_REWRITTEN_RECERTS): {sorted(stranded)}"
+        f"(run `python tools/fingerprints.py mark-drift`): {stranded}"
     )
 
 
 def test_recert_list_members_actually_drifted():
-    # The inverse guard — the r16 failure mode of listing an untouched
-    # query. A seat in R18_REWRITTEN_RECERTS asserts the code changed;
-    # if the fingerprint still matches the ledger, the listing is wrong
-    # (or the ledger refresh already consumed it — then drop the seat).
-    drifted = set(fingerprints.drifted())
-    phantom = [n for n in R18_REWRITTEN_RECERTS if n not in drifted]
-    assert not phantom, (
-        f"R18_REWRITTEN_RECERTS entries whose code never drifted: {phantom}"
+    # The inverse guard, the r16 failure mode of queueing an untouched
+    # query: every query in the pending head really drifted at HEAD or
+    # has no ledger row.
+    phantom = sorted(set(_pending_head()) - set(_measured_drift()))
+    assert not phantom, f"pending queries whose code never drifted: {phantom}"
+
+
+def test_stored_drift_flags_match_head():
+    ledger = fingerprints.load_ledger()
+    stored = sorted(n for n, row in ledger.items() if row.get("drifted"))
+    measured = sorted(
+        n for n, row in _measured_drift().items() if row["reason"] == "drifted"
     )
+    assert stored == measured, (
+        "QUERY_FINGERPRINTS.json drift flags disagree with HEAD — run "
+        "`python tools/fingerprints.py mark-drift`: "
+        f"unflagged={sorted(set(measured) - set(stored))} "
+        f"stale-flag={sorted(set(stored) - set(measured))}"
+    )
+
+
+def test_evidence_round_is_newest_green_driver_row():
+    latest = _newest_green_round()
+    wrong = {
+        name: (row.get("evidence_round"), latest.get(name))
+        for name, row in fingerprints.load_ledger().items()
+        if row.get("evidence_round") != latest.get(name)
+    }
+    assert not wrong, (
+        "ledger evidence_round differs from the newest green CORRECTNESS row "
+        "(ledgered, artifact) — run `python tools/fingerprints.py refresh "
+        f"--round N --certified CORRECTNESS_rNN.json`: {wrong}"
+    )
+
+
+def test_green_requires_matching_value_hash():
+    # CORRECTNESS_r01's sessionize_events matched row counts and schema
+    # but not values; it certifies nothing.
+    with open(os.path.join(REPO, "CORRECTNESS_r01.json")) as f:
+        row = json.load(f)["sessionize_events"]
+    assert row["rows_match"] and row["hash_match"] is False
+    assert not fingerprints._green(row)
+    ledger: dict[str, dict] = {}
+    head = {"sessionize_events": "new", "q1_pricing_summary": "q1"}
+    rows = {"sessionize_events": row, "q1_pricing_summary": dict(row, hash_match=True)}
+    assert fingerprints.refresh(ledger, rows, head, 1) == ["q1_pricing_summary"]
+    assert ledger == {"q1_pricing_summary": {"fingerprint": "q1", "evidence_round": 1}}
+
+
+def test_refresh_clears_the_drift_flag():
+    ledger = {"q1_pricing_summary": {"fingerprint": "old", "evidence_round": 3, "drifted": True}}
+    row = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    fingerprints.refresh(ledger, {"q1_pricing_summary": row}, {"q1_pricing_summary": "new"}, 20)
+    assert ledger == {"q1_pricing_summary": {"fingerprint": "new", "evidence_round": 20}}
+
+
+def test_mark_drift_sets_and_clears_flags():
+    ledger = {
+        "a": {"fingerprint": "1", "evidence_round": 9},
+        "b": {"fingerprint": "2", "evidence_round": 9, "drifted": True},
+    }
+    drift = {"a": {"reason": "drifted"}, "c": {"reason": "never-ledgered"}}
+    assert fingerprints.mark_drift(ledger, drift) == ["a"]
+    assert ledger == {
+        "a": {"fingerprint": "1", "evidence_round": 9, "drifted": True},
+        "b": {"fingerprint": "2", "evidence_round": 9},
+    }
+
+
+def test_rebase_skips_unregistered_rows():
+    # A ledger row for a query that no longer registers used to pass the
+    # old == head gate as None == None and then raise KeyError on head[name].
+    ledger = {"gone_query": {"fingerprint": "f", "evidence_round": 18}}
+    restamped, left, unregistered = fingerprints.rebase(ledger, {}, {}, 18)
+    assert (restamped, left, unregistered) == ([], [], ["gone_query"])
+    assert ledger == {"gone_query": {"fingerprint": "f", "evidence_round": 18}}
 
 
 def test_local_imports_join_the_closure():

@@ -2,9 +2,10 @@
 """Dump .explain("formatted") for named registry queries to plans/<tag>/.
 
 Usage: python tools/explain_dump.py <tag> <suffix> q1,q2,...
-Writes plans/<tag>/<query>_<suffix>.txt for each query. The optimization
-rounds commit these as the before/after plan evidence the judge checks
-claims against (guide §1: capture the plan shape before touching code).
+Writes plans/<tag>/<query>_<suffix>.txt for each query: before/after plan
+evidence for an optimization (capture the plan shape before touching
+code). The dumps are regenerated on demand and not committed — ``/plans/``
+is in ``.gitignore``.
 """
 
 from __future__ import annotations

@@ -1,12 +1,6 @@
 """Source fingerprints for every registered query — the mechanical
-stale-by-code detector (ADVICE r16, medium).
-
-Round 16's hand-typed R16_REWRITTEN_RECERTS list both included a query
-the diff never touched (streaming_topk_per_window) and omitted one it
-did (cdc_incremental_cron_replay, whose backing helper
-_run_incremental_cron_replay received the materialize_result swap).
-Hand-derived stale-by-code lists cannot be trusted; this module derives
-them.
+stale-by-code detector, and the maintainer of the ledger that
+``certification_order()`` reads.
 
 A query's fingerprint is a SHA-256 over the concatenated sources of:
 
@@ -17,24 +11,27 @@ A query's fingerprint is a SHA-256 over the concatenated sources of:
   ``mk_kafka_connect_spark`` package that the query's code references
   by name — resolved through the module globals, following one
   ``Attribute`` hop for module aliases (``SW.run_to_memory``) and
-  class methods. This is exactly the closure that bit round 16: the
-  query body was untouched but a shared helper changed.
+  class methods. A shared-helper edit therefore moves every query that
+  calls the helper, even when the query body is untouched.
 
-``QUERY_FINGERPRINTS.json`` at the repo root is the ledger: for each
-query, the fingerprint its newest driver-certified (or, at bootstrap,
-builder-certified) code had, plus the evidence round. The guard test
-``tests/test_stale_by_code.py`` recomputes HEAD fingerprints and fails
-if any query drifted from its ledgered fingerprint without sitting in
-the pending re-certification set (CERTIFICATION_FRONT or the staged
-r18 queue) — so a changed query can no longer silently keep a green
-driver row from old code.
+``QUERY_FINGERPRINTS.json`` at the repo root is the ledger
+(``plans/registry.py::LEDGER``). Each row holds the fingerprint of the
+code its newest green driver row certified, that row's round
+(``evidence_round``) and, when HEAD code differs from that fingerprint,
+``drifted: true``. The registry orders the driver window from these
+rows without tracing anything, so the flags must be rewritten whenever
+code changes::
 
-Refresh after a driver round with::
+    python tools/fingerprints.py mark-drift
 
-    python tools/fingerprints.py refresh --round 17 \
-        --certified CORRECTNESS_r17.json
+``tests/test_stale_by_code.py`` fails when the stored flags disagree
+with HEAD, or when an ``evidence_round`` is not the newest green row
+across ``CORRECTNESS_r*.json``. After a driver round, re-stamp the
+queries that round certified green (this also clears their flags)::
 
-which re-stamps only the queries that round actually certified.
+    python tools/fingerprints.py refresh --round 20 \
+        --certified CORRECTNESS_r20.json
+
 ``python tools/fingerprints.py check`` prints the drift report.
 """
 
@@ -54,7 +51,8 @@ import textwrap
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-LEDGER = os.path.join(REPO, "QUERY_FINGERPRINTS.json")
+from mk_kafka_connect_spark.plans.registry import LEDGER, load_ledger  # noqa: E402
+
 PACKAGE = "mk_kafka_connect_spark"
 
 
@@ -257,13 +255,6 @@ def head_fingerprints() -> dict[str, str]:
     }
 
 
-def load_ledger() -> dict:
-    if not os.path.exists(LEDGER):
-        return {}
-    with open(LEDGER) as f:
-        return json.load(f)
-
-
 def drifted(ledger: dict | None = None) -> dict[str, dict]:
     """Queries whose HEAD fingerprint differs from the ledgered one."""
     ledger = load_ledger() if ledger is None else ledger
@@ -283,85 +274,107 @@ def drifted(ledger: dict | None = None) -> dict[str, dict]:
     return out
 
 
-def cmd_bootstrap(round_no: int) -> None:
-    """Stamp EVERY query with its current fingerprint.
+def _green(row) -> bool:
+    """True when a driver row certifies its query: rows, schema and value
+    hash all agree (``hash_match`` None = a rows-only check) and no error."""
+    return (
+        isinstance(row, dict)
+        and bool(row.get("rows_match"))
+        and row.get("schema_match") is not False
+        and row.get("hash_match") in (True, None)
+        and not row.get("err")
+    )
 
-    Only valid when the builder has just verified the full registry
-    against the oracles on current code (the r17 bootstrap ran after a
-    full-registry strict-parity pass), so 'current code' IS the
-    certified code for every query.
-    """
-    head = head_fingerprints()
-    ledger = {
-        name: {"fingerprint": fp, "evidence_round": round_no}
-        for name, fp in sorted(head.items())
-    }
+
+def _write_ledger(ledger: dict) -> None:
     with open(LEDGER, "w") as f:
         json.dump(ledger, f, indent=1, sort_keys=True)
         f.write("\n")
-    print(f"bootstrapped {len(ledger)} fingerprints at round {round_no}")
+
+
+def mark_drift(ledger: dict, drift: dict[str, dict]) -> list[str]:
+    """Set ``drifted`` on the rows ``drift`` reports drifted, clear it on
+    every other row; returns the flagged names."""
+    flagged = []
+    for name, row in sorted(ledger.items()):
+        if drift.get(name, {}).get("reason") == "drifted":
+            row["drifted"] = True
+            flagged.append(name)
+        else:
+            row.pop("drifted", None)
+    return flagged
+
+
+def refresh(ledger: dict, rows: dict, head: dict[str, str], round_no: int) -> list[str]:
+    """Re-stamp every registered query ``rows`` certifies green at its
+    HEAD fingerprint and ``round_no`` (dropping any drift flag)."""
+    stamped = sorted(n for n, r in rows.items() if n in head and _green(r))
+    for name in stamped:
+        ledger[name] = {"fingerprint": head[name], "evidence_round": round_no}
+    return stamped
+
+
+def rebase(
+    ledger: dict, old: dict[str, str], head: dict[str, str], round_no: int
+) -> tuple[list[str], list[str], list[str]]:
+    """Re-stamp PURE tracer-coverage flips after a tracer upgrade.
+
+    When the fingerprint TRACER itself improves (round 19: function-
+    local imports joined the closure), every query whose closure grew
+    flips its hash with zero code change. ``old`` must be the output
+    of ``dump`` run with the UPGRADED tracer in a checkout of the
+    commit the evidence round certified. A ``round_no`` row is
+    re-stamped (fingerprint updated, evidence round preserved) ONLY
+    when the old-commit fingerprint equals the HEAD fingerprint — i.e.
+    the full closure, as measured by the new tracer, is byte-identical
+    to what the driver certified. Anything else is genuinely stale and
+    is left drifted. Rows naming no registered query are skipped.
+
+    Returns (re-stamped, left stale, unregistered) names.
+    """
+    restamped, left, unregistered = [], [], []
+    for name, row in sorted(ledger.items()):
+        if row.get("evidence_round") != round_no:
+            continue
+        if name not in head:
+            unregistered.append(name)
+        elif row["fingerprint"] == head[name]:
+            continue  # not drifted
+        elif old.get(name) == head[name]:
+            ledger[name] = {"fingerprint": head[name], "evidence_round": round_no}
+            restamped.append(name)
+        else:
+            left.append(name)
+    return restamped, left, unregistered
+
+
+def cmd_mark_drift() -> None:
+    ledger = load_ledger()
+    flagged = mark_drift(ledger, drifted(ledger))
+    _write_ledger(ledger)
+    print(f"flagged {len(flagged)} drifted ledger rows")
 
 
 def cmd_refresh(round_no: int, certified_path: str) -> None:
     with open(certified_path) as f:
         rows = json.load(f)
-    green = {
-        n
-        for n, r in rows.items()
-        if isinstance(r, dict)
-        and r.get("rows_match")
-        and r.get("schema_match")
-        and not r.get("err")
-    }
     ledger = load_ledger()
-    head = head_fingerprints()
-    for name in sorted(green):
-        if name in head:
-            ledger[name] = {
-                "fingerprint": head[name],
-                "evidence_round": round_no,
-            }
-    with open(LEDGER, "w") as f:
-        json.dump(ledger, f, indent=1, sort_keys=True)
-        f.write("\n")
-    print(f"refreshed {len(green)} fingerprints at round {round_no}")
+    stamped = refresh(ledger, rows, head_fingerprints(), round_no)
+    _write_ledger(ledger)
+    print(f"refreshed {len(stamped)} fingerprints at round {round_no}")
 
 
 def cmd_rebase(round_no: int, old_path: str) -> None:
-    """Re-stamp PURE tracer-coverage flips after a tracer upgrade.
-
-    When the fingerprint TRACER itself improves (round 19: function-
-    local imports joined the closure), every query whose closure grew
-    flips its hash with zero code change. ``--old`` must be the output
-    of ``dump`` run with the UPGRADED tracer inside a git worktree at
-    the commit the evidence round certified. A ledger entry is
-    re-stamped (fingerprint updated, evidence round preserved) ONLY
-    when the old-commit fingerprint equals the HEAD fingerprint — i.e.
-    the full closure, as measured by the new tracer, is byte-identical
-    to what the driver certified. Anything else is genuinely stale and
-    is left for a re-certification seat.
-    """
     with open(old_path) as f:
         old = json.load(f)
     ledger = load_ledger()
-    head = head_fingerprints()
-    restamped, left = [], []
-    for name, row in sorted(ledger.items()):
-        if row.get("evidence_round") != round_no:
-            continue
-        if row["fingerprint"] == head.get(name):
-            continue  # not drifted
-        if old.get(name) == head.get(name):
-            ledger[name] = {"fingerprint": head[name], "evidence_round": round_no}
-            restamped.append(name)
-        else:
-            left.append(name)
-    with open(LEDGER, "w") as f:
-        json.dump(ledger, f, indent=1, sort_keys=True)
-        f.write("\n")
+    restamped, left, unregistered = rebase(ledger, old, head_fingerprints(), round_no)
+    _write_ledger(ledger)
     print(f"re-stamped {len(restamped)} coverage-only flips at round {round_no}")
     if left:
         print(f"left {len(left)} genuinely stale (need recert seats): {left}")
+    if unregistered:
+        print(f"skipped {len(unregistered)} rows naming no registered query: {unregistered}")
 
 
 def cmd_dump(out_path: str) -> None:
@@ -386,8 +399,7 @@ if __name__ == "__main__":
 
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     sub = p.add_subparsers(dest="cmd", required=True)
-    b = sub.add_parser("bootstrap")
-    b.add_argument("--round", type=int, required=True)
+    sub.add_parser("mark-drift")
     r = sub.add_parser("refresh")
     r.add_argument("--round", type=int, required=True)
     r.add_argument("--certified", required=True)
@@ -398,8 +410,8 @@ if __name__ == "__main__":
     d.add_argument("--out", required=True)
     sub.add_parser("check")
     args = p.parse_args()
-    if args.cmd == "bootstrap":
-        cmd_bootstrap(args.round)
+    if args.cmd == "mark-drift":
+        cmd_mark_drift()
     elif args.cmd == "refresh":
         cmd_refresh(args.round, args.certified)
     elif args.cmd == "rebase":

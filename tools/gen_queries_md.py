@@ -9,6 +9,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mk_kafka_connect_spark.plans import QUERIES, certification_order  # noqa: E402
+from mk_kafka_connect_spark.plans.registry import DRIVER_WINDOW  # noqa: E402
 
 
 def main() -> None:
@@ -23,8 +24,8 @@ def main() -> None:
         "",
         f"**{len(QUERIES)} queries**, "
         f"{sum(1 for s in QUERIES.values() if s.oracle)} with oracles. "
-        "The driver certifies the first 50 of `certification_order()` per round"
-        " (rotation: COVERAGE.md).",
+        f"The driver certifies the first {DRIVER_WINDOW} of `certification_order()`"
+        " per round, computed from `QUERY_FINGERPRINTS.json` (rule: COVERAGE.md).",
         "",
         "| # | Query | Check | Tags | What it proves |",
         "|---|---|---|---|---|",
@@ -33,7 +34,7 @@ def main() -> None:
         s = QUERIES[name]
         check = "oracle" if s.oracle else "rows-only"
         doc = (s.doc or "").strip().split("\n")[0].rstrip(".")
-        win = " (window)" if i <= 50 else ""
+        win = " (window)" if i <= DRIVER_WINDOW else ""
         lines.append(
             f"| {i}{win} | `{name}` | {check} | {' '.join(s.tags)} | {doc} |"
         )
