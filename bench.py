@@ -14,6 +14,7 @@ import glob
 import hashlib
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -439,6 +440,23 @@ def _host_load() -> dict[str, float]:
         return {}
 
 
+def _provenance(spark) -> dict[str, object]:
+    """What the artifact ran on: the cores the session actually schedules
+    on (``os.cpu_count()`` reports the host, so an 8-core run on a 32-core
+    host read 32) and the commit benched (None outside a git checkout)."""
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            timeout=10,
+        ).stdout.strip()
+    except (OSError, subprocess.SubprocessError):
+        sha = ""
+    return {"cpus": spark.sparkContext.defaultParallelism, "git_sha": sha or None}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -455,7 +473,8 @@ def main() -> None:
     # contended artifact is mechanically discountable: probe >> its
     # committed anchor (~0.5-0.6 s quiet-host, BASELINE.md §standing
     # anchors) means the whole artifact carries that contention factor.
-    host_load = {"start": _host_load(), "cpus": os.cpu_count()}
+    provenance = _provenance(spark)
+    host_load = {"start": _host_load(), "cpus": provenance["cpus"]}
     anchor_probe: dict[str, object] = {"query": "q1_pricing_summary", "reps": 3}
     try:
         anchor_probe["sec"] = round(
@@ -545,6 +564,7 @@ def main() -> None:
         "sf": sf_val,
         "fixture_hashes": _fixture_hashes(sf_dir),
         "host_load": host_load,
+        "git_sha": provenance["git_sha"],
         "anchor_probe": anchor_probe,
     }
     if contended:

@@ -38,21 +38,19 @@ class CdcPipeline:
     transform_chain: list[dict[str, Any]] = field(default_factory=list)
     topic_prefix: str = "rest"
 
-    def _apply(self, raw: DataFrame) -> DataFrame:
-        """Source rows (entity, key, payload, _ingestion_timestamp,
-        _load_mode) → transformed, routed records."""
+    def _read(self, spark: SparkSession, reader) -> DataFrame:
+        """``paginated_rest`` source rows (entity, key, payload,
+        _ingestion_timestamp, _load_mode) through ``reader``
+        (``spark.read`` or ``spark.readStream``) → transformed, routed
+        records."""
+        register(spark)
+        raw = reader.format("paginated_rest").options(**self.source_options).load()
         df = raw.withColumn("_entity_type", F.col("entity"))
         df = apply_chain(df, self.transform_chain)
         return route_topics(df, self.topic_prefix)
 
     def read_batch(self, spark: SparkSession) -> DataFrame:
-        register(spark)
-        raw = (
-            spark.read.format("paginated_rest")
-            .options(**self.source_options)
-            .load()
-        )
-        return self._apply(raw)
+        return self._read(spark, spark.read)
 
     def run_batch_to_parquet(self, spark: SparkSession, path: str) -> int:
         """One full batch pull → entity-partitioned parquet. Returns row
@@ -71,13 +69,7 @@ class CdcPipeline:
         return spark.read.parquet(path).count()
 
     def stream(self, spark: SparkSession) -> DataFrame:
-        register(spark)
-        raw = (
-            spark.readStream.format("paginated_rest")
-            .options(**self.source_options)
-            .load()
-        )
-        return self._apply(raw)
+        return self._read(spark, spark.readStream)
 
     def run_stream_to_parquet(
         self, spark: SparkSession, path: str, checkpoint: str, timeout_s: int = 300

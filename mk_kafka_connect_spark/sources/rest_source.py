@@ -50,6 +50,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Iterator, Sequence
+from dataclasses import asdict
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -70,7 +71,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .config import RestSourceConfig
+from ..streaming.incremental import INITIAL_LOAD, EntityState
+from .config import DATETIME_FMT, RestSourceConfig
 from .rest_client import RestClient
 
 __all__ = ["PaginatedRestDataSource", "REST_SCHEMA", "register"]
@@ -87,25 +89,62 @@ REST_SCHEMA = StructType(
 )
 
 
-def _record_row(
-    entity: str, rec: dict, id_field: str, load_mode: str, datetime_field: str
-):
-    """createSourceRecord (Task.java:394-449): extract key, drop keyless
-    rows, wrap payload as JSON, stamp metadata; surface the incremental
-    datetime field as a typed column so Catalyst filters on it are
+def _fetch_rows(
+    cfg: RestSourceConfig,
+    entity: str,
+    lo: str | None,
+    hi: str | None,
+    load_mode: str,
+    offset: int,
+) -> Iterator[tuple]:
+    """One entity's half-open window [lo, hi) from page ``offset`` — the
+    pagination loop of Task.java:195-240 — as source rows; shared by the
+    batch and the stream reader.
+
+    Each record becomes a row the way createSourceRecord
+    (Task.java:394-449) builds one: extract the key, drop keyless rows,
+    wrap the payload as JSON, stamp metadata; the incremental datetime
+    field is surfaced as a typed column so Catalyst filters on it are
     pushable."""
-    rid = rec.get(id_field)
-    if rid is None:
-        return None  # Task.java:396-401 — skip records without an id
-    dt = rec.get(datetime_field)
-    return (
-        entity,
-        json.dumps({id_field: rid}),  # key map, Task.java:431-432
-        json.dumps(rec, sort_keys=True),
-        int(time.time() * 1000),  # _ingestion_timestamp, Task.java:427
-        load_mode,
-        None if dt is None else str(dt),
+    client = RestClient(
+        cfg.base_url,
+        cfg.username,
+        cfg.password,
+        timeout_s=cfg.request_timeout_s,
+        max_retries=cfg.max_retries,
     )
+    id_field, dt_field = cfg.id_field(entity), cfg.datetime_field(entity)
+    for _, page in client.fetch_all(
+        entity,
+        dt_field,
+        lo,
+        hi,
+        cfg.batch_size,
+        cfg.entity_query_params(entity),
+        start_offset=offset,
+    ):
+        for rec in page.records:
+            rid = rec.get(id_field)
+            if rid is None:
+                continue  # Task.java:396-401 — skip records without an id
+            dt = rec.get(dt_field)
+            yield (
+                entity,
+                json.dumps({id_field: rid}),  # key map, Task.java:431-432
+                json.dumps(rec, sort_keys=True),
+                int(time.time() * 1000),  # _ingestion_timestamp, Task.java:427
+                load_mode,
+                None if dt is None else str(dt),
+            )
+
+
+def _tighter(a: str | None, b: str | None, pick) -> str | None:
+    """The tighter of two optional bounds (``pick`` is min or max)."""
+    if a is None:
+        return b
+    if b is None:
+        return a
+    return pick(a, b)
 
 
 class _EntityPartition(InputPartition):
@@ -135,50 +174,25 @@ class _RestBatchReader(DataSourceReader):
         entity filters are consumed (partition pruning is exact)."""
         remaining: list[Filter] = []
         for f in filters:
-            attr = tuple(f.attribute) if hasattr(f, "attribute") else None
-            if attr == ("entity",) and isinstance(f, EqualTo) and isinstance(f.value, str):
-                keep = {f.value}
-                self._pushed_entities = (
-                    keep if self._pushed_entities is None
-                    else self._pushed_entities & keep
-                )
-                continue  # exact: consumed
-            if (
-                attr == ("entity",)
-                and isinstance(f, In)
-                and all(isinstance(v, str) for v in f.value)
-            ):
-                keep = set(f.value)
-                self._pushed_entities = (
-                    keep if self._pushed_entities is None
-                    else self._pushed_entities & keep
-                )
-                continue  # exact: consumed
-            if attr == ("_event_datetime",) and isinstance(getattr(f, "value", None), str):
+            attr = tuple(getattr(f, "attribute", ()))
+            value = getattr(f, "value", None)
+            if attr == ("entity",) and isinstance(f, (EqualTo, In)):
+                keep = set(value) if isinstance(f, In) else {value}
+                if all(isinstance(v, str) for v in keep):
+                    self._pushed_entities = (
+                        keep if self._pushed_entities is None
+                        else self._pushed_entities & keep
+                    )
+                    continue  # exact: consumed
+            if attr == ("_event_datetime",) and isinstance(value, str):
                 # GT is fetched as GTE (superset); Spark re-applies the
                 # strict bound since every datetime filter is returned.
                 if isinstance(f, (GreaterThanOrEqual, GreaterThan)):
-                    self._pushed_start = (
-                        f.value
-                        if self._pushed_start is None
-                        else max(self._pushed_start, f.value)
-                    )
+                    self._pushed_start = _tighter(self._pushed_start, value, max)
                 elif isinstance(f, LessThan):
-                    self._pushed_end = (
-                        f.value
-                        if self._pushed_end is None
-                        else min(self._pushed_end, f.value)
-                    )
+                    self._pushed_end = _tighter(self._pushed_end, value, min)
             remaining.append(f)
         return iter(remaining)
-
-    @staticmethod
-    def _tighter(a: str | None, b: str | None, pick) -> str | None:
-        if a is None:
-            return b
-        if b is None:
-            return a
-        return pick(a, b)
 
     def partitions(self) -> Sequence[InputPartition]:
         # One partition per entity (A17 fan-out done Spark-natively),
@@ -188,15 +202,11 @@ class _RestBatchReader(DataSourceReader):
             for e in self.cfg.entities
             if self._pushed_entities is None or e in self._pushed_entities
         ]
-        end = self._tighter(
-            self.options.get("end_datetime"), self._pushed_end, min
-        )
+        end = _tighter(self.options.get("end_datetime"), self._pushed_end, min)
         return [
             _EntityPartition(
                 e,
-                self._tighter(
-                    self.cfg.initial_datetimes.get(e), self._pushed_start, max
-                ),
+                _tighter(self.cfg.initial_datetimes.get(e), self._pushed_start, max),
                 end,
                 0,
             )
@@ -204,118 +214,58 @@ class _RestBatchReader(DataSourceReader):
         ]
 
     def read(self, partition: _EntityPartition) -> Iterator[tuple]:
-        cfg = self.cfg
-        client = RestClient(
-            cfg.base_url,
-            cfg.username,
-            cfg.password,
-            timeout_s=cfg.request_timeout_s,
-            max_retries=cfg.max_retries,
-        )
-        e = partition.entity
-        for _, page in client.fetch_all(
-            e,
-            cfg.datetime_field(e),
+        return _fetch_rows(
+            self.cfg,
+            partition.entity,
             partition.start,
             partition.end,
-            cfg.batch_size,
-            cfg.entity_query_params(e),
-            start_offset=partition.offset,
-        ):
-            for rec in page.records:
-                row = _record_row(
-                    e, rec, cfg.id_field(e), "INITIAL_LOAD", cfg.datetime_field(e)
-                )
-                if row is not None:
-                    yield row
+            INITIAL_LOAD,
+            partition.offset,
+        )
 
 
 class _RestStreamReader(SimpleDataSourceStreamReader):
     """Micro-batch stream: each batch drains everything newer than the
     per-entity watermark, freezing the upper bound at batch start
     (half-open window [last, end), Task.java:245-262). The offset dict is
-    the 7-field EntityState per entity."""
+    the 7-field EntityState per entity, moved by the same
+    ``start_batch``/``complete_batch`` transitions as IncrementalDriver."""
 
-    def __init__(self, cfg: RestSourceConfig, options: dict):
+    def __init__(self, cfg: RestSourceConfig):
         self.cfg = cfg
-        self.options = options
-        self._clock = lambda: time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
+        self._clock = lambda: time.strftime(DATETIME_FMT, time.gmtime())
 
     def initialOffset(self) -> dict:
         # Fresh start: from configured initial datetime or "now"
         # (Task.java:117-129).
         now = self._clock()
+        start = self.cfg.initial_datetimes
         return {
-            e: {
-                "load_mode": "INITIAL_LOAD",
-                "last_processed_datetime": self.cfg.initial_datetimes.get(e, now),
-                "batch_end_datetime": None,
-                "next_scheduled_run": 0,
-                "current_offset": 0,
-                "is_processing_batch": False,
-                "retry_count": 0,
-            }
+            e: asdict(EntityState(last_processed_datetime=start.get(e, now)))
             for e in self.cfg.entities
         }
 
-    def _drain(self, start: dict, end_bounds: dict) -> list[tuple]:
-        """Fetch each entity's half-open window [start[e].last, end_bounds[e])
-        — the deterministic core shared by read() and readBetweenOffsets()."""
-        cfg = self.cfg
-        client = RestClient(
-            cfg.base_url,
-            cfg.username,
-            cfg.password,
-            timeout_s=cfg.request_timeout_s,
-            max_retries=cfg.max_retries,
-        )
+    def _drain(self, start: dict, end_bounds: dict) -> tuple[list[tuple], dict]:
+        """Start a batch per entity at ``end_bounds[e]`` and fetch its
+        window [last, end) — the deterministic core shared by read() and
+        readBetweenOffsets(). Returns the rows and the started states."""
+        states = {e: EntityState(**st) for e, st in start.items()}
         rows: list[tuple] = []
-        for e, st in start.items():
-            mode = st["load_mode"]
-            lo = st["last_processed_datetime"]
-            hi = end_bounds[e]
-            if hi is None or hi <= lo:
-                continue  # empty window — nothing to (re)fetch
-            for _, page in client.fetch_all(
-                e,
-                cfg.datetime_field(e),
-                lo,
-                hi,
-                cfg.batch_size,
-                cfg.entity_query_params(e),
-                start_offset=int(st.get("current_offset", 0)),
-            ):
-                for rec in page.records:
-                    row = _record_row(
-                        e, rec, cfg.id_field(e), mode, cfg.datetime_field(e)
-                    )
-                    if row is not None:
-                        rows.append(row)
-        return rows
+        for e, st in states.items():
+            st.start_batch(end_bounds[e])
+            lo, hi = st.last_processed_datetime, st.batch_end_datetime
+            if hi is not None and lo < hi:  # else empty: nothing to (re)fetch
+                rows.extend(
+                    _fetch_rows(self.cfg, e, lo, hi, st.load_mode, st.current_offset)
+                )
+        return rows, states
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         end_dt = self._clock()  # freeze upper bound, Task.java:245-262
-        rows = self._drain(start, {e: end_dt for e in start})
-        # completeBatch (Task.java:267-291): watermark advances to the
-        # frozen bound; INITIAL → INCREMENTAL after first drain. The
-        # max() keeps the watermark monotonic even if the driver clock
-        # steps backwards (NTP correction, VM migration): a regressed
-        # watermark would re-emit the [end_dt, prev_watermark) window.
-        new_offset = {
-            e: {
-                **st,
-                "load_mode": "INCREMENTAL_LOAD",
-                "last_processed_datetime": max(
-                    st["last_processed_datetime"], end_dt
-                ),
-                "batch_end_datetime": None,
-                "current_offset": 0,
-                "is_processing_batch": False,
-                "retry_count": 0,
-            }
-            for e, st in start.items()
-        }
-        return iter(rows), new_offset
+        rows, states = self._drain(start, {e: end_dt for e in start})
+        for st in states.values():
+            st.complete_batch()
+        return iter(rows), {e: asdict(st) for e, st in states.items()}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         """Replay for recovery: re-read exactly [start[e].last, end[e].last)
@@ -331,12 +281,7 @@ class _RestStreamReader(SimpleDataSourceStreamReader):
             e: (end.get(e) or {}).get("last_processed_datetime")
             for e in start
         }
-        return iter(
-            self._drain(
-                {e: {**st, "current_offset": 0} for e, st in start.items()},
-                bounds,
-            )
-        )
+        return iter(self._drain(start, bounds)[0])
 
 
 class PaginatedRestDataSource(DataSource):
@@ -352,17 +297,17 @@ class PaginatedRestDataSource(DataSource):
     def schema(self) -> StructType:
         return REST_SCHEMA
 
-    def reader(self, schema: StructType) -> DataSourceReader:
+    def _config(self) -> RestSourceConfig:
         cfg = RestSourceConfig.from_options(dict(self.options))
         if not cfg.base_url:
             raise ValueError("paginated_rest: 'url' option is required")
-        return _RestBatchReader(cfg, dict(self.options))
+        return cfg
+
+    def reader(self, schema: StructType) -> DataSourceReader:
+        return _RestBatchReader(self._config(), dict(self.options))
 
     def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        cfg = RestSourceConfig.from_options(dict(self.options))
-        if not cfg.base_url:
-            raise ValueError("paginated_rest: 'url' option is required")
-        return _RestStreamReader(cfg, dict(self.options))
+        return _RestStreamReader(self._config())
 
 
 def register(spark) -> None:
@@ -384,9 +329,10 @@ def register(spark) -> None:
 
     from pyspark import cloudpickle
 
+    from ..session import ship_package
+    from ..streaming import incremental as _incremental
     from . import config as _config
     from . import rest_client as _rest_client
-    from ..session import ship_package
 
     registered = getattr(spark, "_mkkc_rest_source_registered", False)
 
@@ -412,9 +358,8 @@ def register(spark) -> None:
             spark.conf.set(key, "true")
 
     ship_package(spark)  # task workers unpickle the reader by reference
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    cloudpickle.register_pickle_by_value(_config)
-    cloudpickle.register_pickle_by_value(_rest_client)
+    for module in (sys.modules[__name__], _config, _rest_client, _incremental):
+        cloudpickle.register_pickle_by_value(module)
     if not registered:
         spark.dataSource.register(PaginatedRestDataSource)
         spark._mkkc_rest_source_registered = True

@@ -30,17 +30,15 @@ import json
 import os
 import tempfile
 from collections.abc import Callable
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 from datetime import datetime
-from typing import Any
 
 from pyspark.sql import DataFrame
 
+from ..sources.config import DATETIME_FMT
 from .cron import next_fire
 
 __all__ = ["EntityState", "StateStore", "IncrementalDriver", "Window"]
-
-DATETIME_FMT = "%Y-%m-%d %H:%M:%S"
 
 INITIAL_LOAD = "INITIAL_LOAD"
 INCREMENTAL_LOAD = "INCREMENTAL_LOAD"
@@ -48,7 +46,13 @@ INCREMENTAL_LOAD = "INCREMENTAL_LOAD"
 
 @dataclass
 class EntityState:
-    """Task.java:34-52, field for field."""
+    """Task.java:34-52, field for field, and its two batch transitions —
+    the one owner of the per-entity state format. ``IncrementalDriver``
+    keeps these in its state document; the streaming REST reader
+    (``sources/rest_source.py``) serializes them as its offset via
+    ``asdict``. The streaming source runner unpickles this class by value,
+    so the methods must reference nothing outside this module's constants
+    (the caller computes the cron fire)."""
 
     load_mode: str = INITIAL_LOAD
     last_processed_datetime: str | None = None
@@ -57,6 +61,29 @@ class EntityState:
     current_offset: int = 0
     is_processing_batch: bool = False
     retry_count: int = 0
+
+    def start_batch(self, end: str | None) -> None:
+        """startNewBatch (Task.java:245-262): freeze the upper bound, so
+        in-flight mutations land in the next batch."""
+        self.batch_end_datetime = end
+        self.current_offset = 0
+        self.is_processing_batch = True
+
+    def complete_batch(self, next_run: int = 0) -> None:
+        """completeBatch (Task.java:267-291): advance the watermark to the
+        frozen bound, switch INITIAL → INCREMENTAL, schedule the next run.
+        The max() keeps the watermark monotonic if the clock steps
+        backwards (NTP correction, VM migration): a regressed watermark
+        would re-emit the [end, previous watermark) window."""
+        self.last_processed_datetime = max(
+            self.last_processed_datetime, self.batch_end_datetime
+        )
+        self.batch_end_datetime = None
+        self.current_offset = 0
+        self.is_processing_batch = False
+        self.retry_count = 0
+        self.load_mode = INCREMENTAL_LOAD
+        self.next_scheduled_run = next_run
 
 
 @dataclass
@@ -127,9 +154,7 @@ class IncrementalDriver:
                 start = self.initial_datetimes.get(
                     e, self.clock().strftime(DATETIME_FMT)
                 )
-                self.states[e] = EntityState(
-                    load_mode=INITIAL_LOAD, last_processed_datetime=start
-                )
+                self.states[e] = EntityState(last_processed_datetime=start)
         store.save(self.states)
 
     def _ready(self, st: EntityState, now: datetime) -> bool:
@@ -148,27 +173,15 @@ class IncrementalDriver:
             st = self.states[e]
             if not self._ready(st, now):
                 continue
-            # startNewBatch (Task.java:245-262): freeze the upper bound.
             if not st.is_processing_batch:
-                st.batch_end_datetime = now.strftime(DATETIME_FMT)
-                st.current_offset = 0
-                st.is_processing_batch = True
+                st.start_batch(now.strftime(DATETIME_FMT))
                 self.store.save(self.states)
             window = Window(e, st.last_processed_datetime, st.batch_end_datetime)
-            df = self.fetch(e, window.start, window.end)
-            self.sink(df, e, window)
-            # completeBatch (Task.java:267-291) — only after the sink
-            # commit; a crash before this line replays the same window.
-            st.last_processed_datetime = st.batch_end_datetime
-            st.batch_end_datetime = None
-            st.is_processing_batch = False
-            st.current_offset = 0
-            st.retry_count = 0
-            if st.load_mode == INITIAL_LOAD:
-                st.load_mode = INCREMENTAL_LOAD
-            st.next_scheduled_run = int(
-                next_fire(self.cron, now, tz=self.cron_timezone).timestamp() * 1000
-            )
+            self.sink(self.fetch(e, window.start, window.end), e, window)
+            # Only after the sink commit: a crash before this line replays
+            # the same frozen window.
+            fire = next_fire(self.cron, now, tz=self.cron_timezone)
+            st.complete_batch(int(fire.timestamp() * 1000))
             self.store.save(self.states)
             processed.append(window)
         return processed

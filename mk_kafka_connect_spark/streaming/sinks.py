@@ -12,6 +12,9 @@ operator, this is the streaming CDC → SCD-1 table maintenance loop.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -71,6 +74,56 @@ def run_foreach_batch(
             )
 
 
+class _VersionedState:
+    """The versioned state directory behind the SCD-1, SCD-2 and
+    additive-aggregate writers: one ``v=<epoch>`` parquet directory per
+    epoch under ``root``.
+
+    An epoch's previous state is the HIGHEST existing version below it —
+    epoch ids are not guaranteed contiguous (checkpoint reuse across
+    runs, a restart that skipped an empty batch), so assuming
+    ``v=<epoch-1>`` would silently discard all prior state on a gap. An
+    epoch > 0 with NO prior version means the checkpoint and the state
+    dir are out of sync: error, don't quietly rebuild from one batch.
+    Writes overwrite the epoch's own directory, so a replayed epoch is
+    idempotent."""
+
+    def __init__(self, root: str, writer: str):
+        self.root = root
+        self.writer = writer
+
+    def versions(self) -> list[int]:
+        if not os.path.isdir(self.root):
+            return []
+        return sorted(
+            int(m.group(1))
+            for d in os.listdir(self.root)
+            if (m := re.fullmatch(r"v=(\d+)", d))
+        )
+
+    def path(self, version: int) -> str:
+        return os.path.join(self.root, f"v={version}")
+
+    def prior(self, spark, epoch_id: int) -> DataFrame | None:
+        """The state ``epoch_id`` builds on; None only for a first epoch 0."""
+        prior = [v for v in self.versions() if v < epoch_id]
+        if prior:
+            return spark.read.parquet(self.path(prior[-1]))
+        if epoch_id > 0:
+            raise RuntimeError(
+                f"{self.writer}: epoch {epoch_id} has no prior state version "
+                f"under {self.root} — checkpoint/state mismatch (refusing to "
+                "silently reset the state)"
+            )
+        return None
+
+    def latest(self, spark) -> DataFrame:
+        return spark.read.parquet(self.path(self.versions()[-1]))
+
+    def write(self, df: DataFrame, epoch_id: int) -> None:
+        df.write.mode("overwrite").parquet(self.path(epoch_id))
+
+
 def scd1_state_writer(
     state_root: str,
     key_cols: list[str],
@@ -98,53 +151,20 @@ def scd1_state_writer(
 
     Returns (apply_fn, read_final_fn).
     """
-    import os as _os
-
-    from pyspark.sql import functions as _F
-
     from ..operators.cdc import compact_latest
 
-    def _versions() -> list[int]:
-        import re as _re
-
-        if not _os.path.isdir(state_root):
-            return []
-        return [
-            int(m.group(1))
-            for d in _os.listdir(state_root)
-            if (m := _re.fullmatch(r"v=(\d+)", d))
-        ]
+    state = _VersionedState(state_root, "scd1_state_writer")
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        changes = batch_df.withColumn("_ord", _F.struct(*order_cols))
-        # Previous state = the HIGHEST existing version below this epoch —
-        # epoch ids are not guaranteed contiguous (checkpoint reuse across
-        # runs, a restart that skipped an empty batch). Assuming
-        # v=<epoch-1> would silently discard all prior state on a gap;
-        # and an epoch>0 with NO prior version at all means the
-        # checkpoint and the state dir are out of sync — error, don't
-        # quietly rebuild from one batch.
-        prior = [v for v in _versions() if v < epoch_id]
-        if prior:
-            prev_path = _os.path.join(state_root, f"v={max(prior)}")
-            merged = spark.read.parquet(prev_path).unionByName(changes)
-        elif epoch_id > 0:
-            raise RuntimeError(
-                f"scd1_state_writer: epoch {epoch_id} has no prior state "
-                f"version under {state_root} — checkpoint/state mismatch "
-                "(refusing to silently reset the dimension)"
-            )
-        else:
-            merged = changes
-        out = compact_latest(merged, key_cols, "_ord")
-        out.write.mode("overwrite").parquet(_os.path.join(state_root, f"v={epoch_id}"))
+        changes = batch_df.withColumn("_ord", F.struct(*order_cols))
+        prev = state.prior(batch_df.sparkSession, epoch_id)
+        merged = changes if prev is None else prev.unionByName(changes)
+        state.write(compact_latest(merged, key_cols, "_ord"), epoch_id)
 
     def read_final(spark) -> DataFrame:
-        versions = _versions()
-        final = spark.read.parquet(_os.path.join(state_root, f"v={max(versions)}"))
+        final = state.latest(spark)
         if tombstone_col is not None:
-            final = final.filter(~_F.coalesce(_F.col(tombstone_col), _F.lit(False)))
+            final = final.filter(~F.coalesce(F.col(tombstone_col), F.lit(False)))
         return final.drop("_ord")
 
     return apply, read_final
@@ -183,65 +203,35 @@ def scd2_state_writer(
 
     Returns (apply_fn, read_final_fn).
     """
-    import os as _os
-
     from ..operators.cdc import scd2_history
 
     _derived = ["valid_from", "valid_to", "is_current"]
-
-    def _versions() -> list[int]:
-        import re as _re
-
-        if not _os.path.isdir(state_root):
-            return []
-        return [
-            int(m.group(1))
-            for d in _os.listdir(state_root)
-            if (m := _re.fullmatch(r"v=(\d+)", d))
-        ]
+    state = _VersionedState(state_root, "scd2_state_writer")
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prior = [v for v in _versions() if v < epoch_id]
-        if prior:
-            prev = spark.read.parquet(
-                _os.path.join(state_root, f"v={max(prior)}")
-            )
+        prev = state.prior(batch_df.sparkSession, epoch_id)
+        if prev is None:
+            untouched = None
+            changes = batch_df
+        else:
             bkeys = batch_df.select(*key_cols).distinct()
             untouched = prev.join(F.broadcast(bkeys), key_cols, "left_anti")
             touched_changes = prev.join(
                 F.broadcast(bkeys), key_cols, "left_semi"
             ).drop(*_derived)
             changes = touched_changes.unionByName(batch_df)
-        elif epoch_id > 0:
-            raise RuntimeError(
-                f"scd2_state_writer: epoch {epoch_id} has no prior state "
-                f"version under {state_root} — checkpoint/state mismatch "
-                "(refusing to silently reset the history)"
-            )
-        else:
-            untouched = None
-            changes = batch_df
         rebuilt = scd2_history(
             changes.dropDuplicates(key_cols + [ts_col, tiebreak_col]),
             key_cols,
             ts_col,
             tiebreak_col=tiebreak_col,
         )
-        out = (
-            rebuilt if untouched is None else untouched.unionByName(rebuilt)
-        )
-        out.write.mode("overwrite").parquet(
-            _os.path.join(state_root, f"v={epoch_id}")
+        state.write(
+            rebuilt if untouched is None else untouched.unionByName(rebuilt),
+            epoch_id,
         )
 
-    def read_final(spark) -> DataFrame:
-        versions = _versions()
-        return spark.read.parquet(
-            _os.path.join(state_root, f"v={max(versions)}")
-        )
-
-    return apply, read_final
+    return apply, state.latest
 
 
 def additive_agg_state_writer(
@@ -269,76 +259,45 @@ def additive_agg_state_writer(
 
     Returns (apply_fn, read_final_fn).
     """
-    import os as _os
-
-    from pyspark.sql import functions as _F
-
     from ..functions.exact import dec2 as _dec2
 
-    def _versions() -> list[int]:
-        import re as _re
-
-        if not _os.path.isdir(state_root):
-            return []
-        return [
-            int(m.group(1))
-            for d in _os.listdir(state_root)
-            if (m := _re.fullmatch(r"v=(\d+)", d))
-        ]
+    state = _VersionedState(state_root, "additive_agg_state_writer")
 
     def _partial(df: DataFrame) -> DataFrame:
         return df.groupBy(*key_cols).agg(
-            _F.count(_F.lit(1)).alias("n_rows"),
+            F.count(F.lit(1)).alias("n_rows"),
             *[
-                _F.sum(_dec2(src)).cast("decimal(28,2)").alias(out)
+                F.sum(_dec2(src)).cast("decimal(28,2)").alias(out)
                 for out, src in sum_cols.items()
             ],
         )
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         delta = _partial(batch_df)
-        prior = [v for v in _versions() if v < epoch_id]
-        if prior:
-            prev = spark.read.parquet(
-                _os.path.join(state_root, f"v={max(prior)}")
-            )
-            zero = _F.lit(0).cast("decimal(28,2)")
-            merged = prev.alias("p").join(
-                delta.alias("d"), key_cols, "full_outer"
-            ).select(
-                *key_cols,
+        prev = state.prior(batch_df.sparkSession, epoch_id)
+        if prev is None:
+            state.write(delta, epoch_id)
+            return
+        zero = F.lit(0).cast("decimal(28,2)")
+        merged = prev.alias("p").join(
+            delta.alias("d"), key_cols, "full_outer"
+        ).select(
+            *key_cols,
+            (
+                F.coalesce(F.col("p.n_rows"), F.lit(0))
+                + F.coalesce(F.col("d.n_rows"), F.lit(0))
+            ).alias("n_rows"),
+            *[
                 (
-                    _F.coalesce(_F.col("p.n_rows"), _F.lit(0))
-                    + _F.coalesce(_F.col("d.n_rows"), _F.lit(0))
-                ).alias("n_rows"),
-                *[
-                    (
-                        _F.coalesce(_F.col(f"p.{out}"), zero)
-                        + _F.coalesce(_F.col(f"d.{out}"), zero)
-                    ).cast("decimal(28,2)").alias(out)
-                    for out in sum_cols
-                ],
-            )
-        elif epoch_id > 0:
-            raise RuntimeError(
-                f"additive_agg_state_writer: epoch {epoch_id} has no prior "
-                f"state version under {state_root} — checkpoint/state "
-                "mismatch (refusing to silently reset the aggregate)"
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            _os.path.join(state_root, f"v={epoch_id}")
+                    F.coalesce(F.col(f"p.{out}"), zero)
+                    + F.coalesce(F.col(f"d.{out}"), zero)
+                ).cast("decimal(28,2)").alias(out)
+                for out in sum_cols
+            ],
         )
+        state.write(merged, epoch_id)
 
-    def read_final(spark) -> DataFrame:
-        versions = _versions()
-        return spark.read.parquet(
-            _os.path.join(state_root, f"v={max(versions)}")
-        )
-
-    return apply, read_final
+    return apply, state.latest
 
 
 def prune_state_versions(state_root: str, keep_last: int = 2) -> list[int]:
@@ -354,21 +313,13 @@ def prune_state_versions(state_root: str, keep_last: int = 2) -> list[int]:
     preserves replay-idempotence for the in-flight epoch). Refuses
     keep_last < 2 for exactly that reason. Returns the pruned version
     numbers."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-
     if keep_last < 2:
         raise ValueError(
             "prune_state_versions: keep_last must be >= 2 — the previous "
             "version is the replay target of the in-flight epoch"
         )
-    versions = sorted(
-        int(m.group(1))
-        for d in _os.listdir(state_root)
-        if (m := _re.fullmatch(r"v=(\d+)", d))
-    )
-    doomed = versions[:-keep_last] if len(versions) > keep_last else []
+    state = _VersionedState(state_root, "prune_state_versions")
+    doomed = state.versions()[:-keep_last]
     for v in doomed:
-        _shutil.rmtree(_os.path.join(state_root, f"v={v}"), ignore_errors=True)
+        shutil.rmtree(state.path(v), ignore_errors=True)
     return doomed

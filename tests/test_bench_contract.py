@@ -33,6 +33,21 @@ def test_host_load_helper_shape():
     assert all(isinstance(v, float) and v >= 0 for v in hl.values())
 
 
+def test_provenance_records_session_cores_and_commit():
+    # host_load.cpus is the session's scheduling width, not the host's
+    # os.cpu_count() (an 8-core artifact from a 32-core host read 32).
+    import subprocess
+    from types import SimpleNamespace
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=3))
+    prov = _bench_module()._provenance(fake)
+    assert prov["cpus"] == 3
+    head = subprocess.run(
+        ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True, text=True
+    ).stdout.strip()
+    assert prov["git_sha"] == (head or None)
+
+
 def test_committed_artifact_carries_the_preamble():
     path = os.path.join(REPO, "BENCH_LOCAL.json")
     with open(path) as f:

@@ -150,7 +150,7 @@ def _stream_reader(url: str, clock_values: list[str]):
             "initial.datetimes": "customer:2024-01-01 00:00:00",
         }
     )
-    r = _RestStreamReader(cfg, {})
+    r = _RestStreamReader(cfg)
     vals = list(clock_values)
     # initialOffset() also reads the clock; keep returning the last value
     # once the script is exhausted.
@@ -268,10 +268,11 @@ def test_datasource_works_without_pythonpath():
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = (
         "import os, sys\n"
         "os.environ.pop('PYTHONPATH', None)\n"
-        "sys.path.insert(0, '/root/repo')\n"
+        f"sys.path.insert(0, {repo!r})\n"
         "from pyspark.sql import SparkSession\n"
         "spark = (SparkSession.builder.master('local[2]')\n"
         "         .config('spark.sql.shuffle.partitions', '2')\n"

@@ -225,3 +225,42 @@ def test_registry_ref_regex_covers_every_alias_in_package():
     assert not uncovered, (
         f"registry-indexing aliases invisible to _REGISTRY_REF: {uncovered}"
     )
+
+
+def test_rebase_dump_carries_and_checks_provenance(tmp_path, capsys):
+    # ADVICE r19 (low): a dump carried no record of the tracer that made
+    # it, so `rebase` could compare hashes from two different tracers.
+    import pytest
+
+    fps = {"q1_pricing_summary": "f" * 64}
+    good = tmp_path / "good.json"
+    good.write_text(json.dumps({
+        "provenance": {"git_sha": "abc123", "tracer": fingerprints.tracer_digest()},
+        "fingerprints": fps,
+    }))
+    assert fingerprints.load_dump(str(good)) == fps
+    assert "git_sha=abc123" in capsys.readouterr().out
+
+    stale = tmp_path / "stale.json"
+    stale.write_text(json.dumps({
+        "provenance": {"git_sha": "abc123", "tracer": "0" * 64},
+        "fingerprints": fps,
+    }))
+    with pytest.raises(SystemExit, match="different tracer"):
+        fingerprints.load_dump(str(stale))
+
+    bare = tmp_path / "bare.json"  # the pre-provenance flat format
+    bare.write_text(json.dumps(fps))
+    with pytest.raises(SystemExit, match="no provenance"):
+        fingerprints.load_dump(str(bare))
+
+
+def test_tracer_digest_moves_with_the_tracer(monkeypatch):
+    # Computed from the tracer's own source, not a hand-bumped constant:
+    # widening what the tracer chases changes the digest.
+    import re
+
+    before = fingerprints.tracer_digest()
+    assert before == fingerprints.tracer_digest()
+    monkeypatch.setattr(fingerprints, "_REGISTRY_REF", re.compile(r"QUERIES\[(\w+)\]"))
+    assert fingerprints.tracer_digest() != before

@@ -45,6 +45,7 @@ import inspect
 import json
 import os
 import re
+import subprocess
 import sys
 import textwrap
 
@@ -245,6 +246,62 @@ def query_fingerprint(name, spec, registry) -> str:
     return hashlib.sha256(blob.encode()).hexdigest()
 
 
+_TRACER = (
+    _source,
+    _in_package,
+    _referenced_names,
+    _import_module,
+    _local_import_namespace,
+    _closure_sources,
+    _fingerprint_inputs,
+    query_fingerprint,
+)
+
+
+def tracer_digest() -> str:
+    """SHA-256 over the tracer's own source: every function that decides
+    what a fingerprint covers, plus the package name and the registry-
+    reference pattern. A dump records it, so ``rebase`` can tell a dump
+    made by a different tracer without a hand-bumped version constant."""
+    parts = [inspect.getsource(f) for f in _TRACER]
+    parts += [PACKAGE, _REGISTRY_REF.pattern]
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
+
+
+def _git_sha() -> str | None:
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+            timeout=10,
+        ).stdout.strip()
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out or None
+
+
+def load_dump(path: str) -> dict[str, str]:
+    """The fingerprints of a ``dump`` file, after printing its provenance.
+    Refuses (SystemExit) a dump with no provenance or one made by a
+    tracer other than this one: ``rebase`` compares its hashes with HEAD
+    hashes, which is only meaningful when one tracer made both."""
+    with open(path) as f:
+        dump = json.load(f)
+    prov = dump.get("provenance") if isinstance(dump, dict) else None
+    if not isinstance(prov, dict):
+        raise SystemExit(f"{path}: dump has no provenance; re-run `dump`")
+    print(f"dump provenance: git_sha={prov.get('git_sha')} tracer={prov.get('tracer')}")
+    if prov.get("tracer") != tracer_digest():
+        raise SystemExit(
+            f"{path}: dump was made by a different tracer "
+            f"({prov.get('tracer')} != {tracer_digest()}); re-run `dump` "
+            "with this tools/fingerprints.py"
+        )
+    return dump["fingerprints"]
+
+
 def head_fingerprints() -> dict[str, str]:
     import __spark_entry__  # noqa: F401  (registers every query)
     from mk_kafka_connect_spark.plans.registry import QUERIES
@@ -321,9 +378,10 @@ def rebase(
 
     When the fingerprint TRACER itself improves (round 19: function-
     local imports joined the closure), every query whose closure grew
-    flips its hash with zero code change. ``old`` must be the output
-    of ``dump`` run with the UPGRADED tracer in a checkout of the
-    commit the evidence round certified. A ``round_no`` row is
+    flips its hash with zero code change. ``old`` must be the
+    fingerprints of a ``dump`` run with the UPGRADED tracer in a
+    checkout of the commit the evidence round certified (``load_dump``
+    refuses a dump whose recorded tracer differs). A ``round_no`` row is
     re-stamped (fingerprint updated, evidence round preserved) ONLY
     when the old-commit fingerprint equals the HEAD fingerprint — i.e.
     the full closure, as measured by the new tracer, is byte-identical
@@ -365,8 +423,7 @@ def cmd_refresh(round_no: int, certified_path: str) -> None:
 
 
 def cmd_rebase(round_no: int, old_path: str) -> None:
-    with open(old_path) as f:
-        old = json.load(f)
+    old = load_dump(old_path)
     ledger = load_ledger()
     restamped, left, unregistered = rebase(ledger, old, head_fingerprints(), round_no)
     _write_ledger(ledger)
@@ -378,8 +435,12 @@ def cmd_rebase(round_no: int, old_path: str) -> None:
 
 
 def cmd_dump(out_path: str) -> None:
+    dump = {
+        "provenance": {"git_sha": _git_sha(), "tracer": tracer_digest()},
+        "fingerprints": head_fingerprints(),
+    }
     with open(out_path, "w") as f:
-        json.dump(head_fingerprints(), f, indent=1, sort_keys=True)
+        json.dump(dump, f, indent=1, sort_keys=True)
         f.write("\n")
     print(f"dumped to {out_path}")
 

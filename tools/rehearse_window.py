@@ -5,7 +5,7 @@ oracle at sf0.01 with the driver's canonicalization.
 
 Usage (from anywhere, with a clean environment):
 
-    cd /tmp && PYTHONPATH= python /root/repo/tools/rehearse_window.py [N] [name ...]
+    cd /tmp && PYTHONPATH= python <repo>/tools/rehearse_window.py [N] [name ...]
 
 N limits the window size (default 50); names filter to specific queries.
 Exit code 0 iff every compared query matches.
@@ -19,7 +19,7 @@ import time
 import traceback
 
 os.environ.pop("PYTHONPATH", None)
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
