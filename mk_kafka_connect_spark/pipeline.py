@@ -4,7 +4,8 @@ routing), declared as one config object.
 
 Reference lifecycle being replaced (SURVEY.md §3.1): Connect runtime →
 ``Connector.start`` → ``Task.poll`` → SMT chain → JsonConverter → Kafka.
-Engine lifecycle: ``CdcPipeline.run_batch`` / ``run_stream`` →
+Engine lifecycle: ``CdcPipeline.run_batch_to_parquet`` /
+``run_stream_to_parquet`` →
 ``paginated_rest`` DataSource → transform chain (``transforms.py``) →
 keyed/enriched/routed records (``operators/cdc.py``) → sink (partitioned
 parquet, Kafka when on classpath, or any writer callable).
@@ -16,6 +17,7 @@ INITIAL/INCREMENTAL modes.
 
 from __future__ import annotations
 
+import copy
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -37,6 +39,8 @@ class CdcPipeline:
     source_options: dict[str, str]
     transform_chain: list[dict[str, Any]] = field(default_factory=list)
     topic_prefix: str = "rest"
+    # (session, config snapshot, routed DataFrame) from the last read_batch.
+    _batch: tuple | None = field(default=None, init=False, repr=False, compare=False)
 
     def _read(self, spark: SparkSession, reader) -> DataFrame:
         """``paginated_rest`` source rows (entity, key, payload,
@@ -50,12 +54,23 @@ class CdcPipeline:
         return route_topics(df, self.topic_prefix)
 
     def read_batch(self, spark: SparkSession) -> DataFrame:
-        return self._read(spark, spark.read)
+        """Batch source rows, transformed and routed. The relation is
+        built once and reused while the session and the config are
+        unchanged; the data is not: it holds no rows, every action
+        re-plans it (a caller's filters reach ``pushFilters`` on a fresh
+        reader) and fetches when it runs. Reuse skips re-resolving the
+        Python DataSource, one Python worker task per call."""
+        config = (self.source_options, self.transform_chain, self.topic_prefix)
+        if self._batch is None or self._batch[0] is not spark or self._batch[1] != config:
+            self._batch = (spark, copy.deepcopy(config), self._read(spark, spark.read))
+        return self._batch[2]
 
     def run_batch_to_parquet(self, spark: SparkSession, path: str) -> int:
-        """One full batch pull → entity-partitioned parquet. Returns row
-        count written. Partitioning by entity + ingestion date gives the
-        time-range pruning layout (SURVEY.md §4)."""
+        """One full batch pull, appended to entity-partitioned parquet
+        under ``path``. Returns the count of all rows under ``path``,
+        including rows an earlier run appended there. Partitioning by
+        entity + ingestion date gives the time-range pruning layout
+        (SURVEY.md §4)."""
         # Defensive cast: a transform chain may have stringified the
         # ingestion timestamp (the string-cast SMT does exactly that).
         out = self.read_batch(spark).withColumn(

@@ -113,17 +113,23 @@ def ship_package(spark: SparkSession) -> None:
     SparkContext and ships it with ``addPyFile`` (workers prepend
     shipped archives to sys.path) — the same mechanism --py-files uses,
     done lazily and idempotently. Call it before registering any Python
-    DataSource; a few-hundred-KB zip, built once per context.
+    DataSource; a few-hundred-KB zip, built once per context and
+    deleted when the interpreter exits.
     """
     sc = spark.sparkContext
     if getattr(sc, "_mkkc_pkg_shipped", False):
         return
+    import atexit
     import shutil
     import tempfile
 
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_root)
-    base = os.path.join(tempfile.mkdtemp(prefix="mkkc_pyfiles_"), "mk_kafka_connect_spark_pkg")
+    zip_dir = tempfile.mkdtemp(prefix="mkkc_pyfiles_")
+    # Removed at interpreter exit, not after addPyFile: on a cluster the
+    # driver's file server keeps serving this path to new executors.
+    atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
+    base = os.path.join(zip_dir, "mk_kafka_connect_spark_pkg")
     zip_path = shutil.make_archive(
         base, "zip", root_dir=parent, base_dir="mk_kafka_connect_spark"
     )

@@ -361,5 +361,16 @@ def register(spark) -> None:
     for module in (sys.modules[__name__], _config, _rest_client, _incremental):
         cloudpickle.register_pickle_by_value(module)
     if not registered:
-        spark.dataSource.register(PaginatedRestDataSource)
+        # The JVM checks the name against the ACTIVE session's sources, so
+        # a second session (spark.newSession()) registers while active.
+        jvm = spark._jvm.SparkSession
+        active = jvm.getActiveSession()
+        jvm.setActiveSession(spark._jsparkSession)
+        try:
+            spark.dataSource.register(PaginatedRestDataSource)
+        finally:
+            if active.isDefined():
+                jvm.setActiveSession(active.get())
+            else:
+                jvm.clearActiveSession()
         spark._mkkc_rest_source_registered = True
