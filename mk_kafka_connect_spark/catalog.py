@@ -13,6 +13,7 @@ code never touches paths directly.
 from __future__ import annotations
 
 import os
+import stat
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -146,7 +147,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # fixtures aren't nanos — a later unrelated parquet read of a
             # nanos column should fail loudly, not silently yield longs.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             # TIMESTAMP(NANOS) read as a nanos-epoch long. Integer division
@@ -163,7 +164,55 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             f"events.ts has unexpected type {ts_type}; fixture format changed "
             "again — extend catalog.load_table's type adaptation."
         )
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+# Session confs that change the schema Spark infers from parquet footers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _file_identity(path: str) -> tuple:
+    """``(st_ino, st_mtime_ns, st_size)`` of ``path``, plus that of every
+    file under it when it is a dataset directory. Raises OSError for a
+    path the local file system cannot stat."""
+    st = os.stat(path)
+    ident = [(st.st_ino, st.st_mtime_ns, st.st_size)]
+    if stat.S_ISDIR(st.st_mode):
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                fst = os.stat(os.path.join(root, f))
+                ident.append((f, fst.st_ino, fst.st_mtime_ns, fst.st_size))
+    return tuple(ident)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs Spark's schema-inference job
+    (``mergeSchemasInParallel``, ~0.1 s even for one file) only on the
+    first read of a file in a session. The inferred schema is kept per
+    session and path, stamped with the file identity and the inference
+    confs; a later read with the same stamp passes it to
+    ``spark.read.schema``. Only the schema is cached: every call returns a
+    fresh relation with fresh attribute ids, so two loads of one table
+    can still be joined with each other."""
+    try:
+        ident = _file_identity(path)
+    except OSError:  # not a local path: let Spark list and infer
+        return spark.read.parquet(path)
+    stamp = (ident, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    schemas = spark.__dict__.setdefault("_mkkc_parquet_schemas", {})
+    cached = schemas.get(path)
+    if cached is not None and cached[0] == stamp:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[path] = (stamp, df.schema)
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

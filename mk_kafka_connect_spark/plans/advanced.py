@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.bounded import bounded_window
 from ..functions.exact import SQL_DSUM, dec2, dsum, one_minus
-from .materialize import materialize_result
+from .materialize import local_relation, materialize_result
 from .registry import query
 
 
@@ -1517,7 +1517,8 @@ def agg_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
         {"p10": 0.1, "p50": 0.5, "p90": 0.9, "p99": 0.99},
     )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(vals["p10"], vals["p50"], vals["p90"], vals["p99"])],
         "p10 double, p50 double, p90 double, p99 double",
     )

@@ -138,8 +138,7 @@ def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream comparison and ranking is bit-equal in DuckDB.
 
     Extracted round 17 from the classifier body (mechanically identical
-    up to the final select; the classifier's fingerprint drift is
-    ledgered in R17_REWRITTEN_RECERTS). Scale shape unchanged: model
+    up to the final select). Scale shape unchanged: model
     fit is a 256-bucket groupBy with map-side partial aggregation,
     model/totals/prior broadcast to the scorer, scoring is explode →
     broadcast hash join → integer groupBy(doc_id)."""

@@ -20,6 +20,7 @@ from ..functions.hashing import MERSENNE_P, SQL_MD5_MOD, minhash_params
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import text as TX
+from .materialize import local_relation
 from .registry import query
 
 P = MERSENNE_P
@@ -2702,8 +2703,8 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (i + 1, a, b) for i, (a, b) in enumerate(merges)
     ]
-    return spark.createDataFrame(
-        rows, "merge_rank bigint, left_sym string, right_sym string"
+    return local_relation(
+        spark, rows, "merge_rank bigint, left_sym string, right_sym string"
     )
 
 
@@ -3075,7 +3076,8 @@ def _register_power_iteration() -> None:
         )
         den = sum(x * x for x in v)
         ray = float(num) / float(den)
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [(i, v[i], ray) for i in range(dims)],
             "dim bigint, component bigint, rayleigh double",
         )

@@ -22,6 +22,7 @@ from ..catalog import load_table
 from ..sources.fake_server import FakeRestServer
 from ..sources.rest_sink import register_sink
 from ..sources.rest_source import register
+from .materialize import local_relation
 from .registry import query
 
 # One server per (process, sf_dir): queries are constructed lazily and
@@ -570,7 +571,8 @@ def rest_retry_backoff_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         int(sum(int(s) for s in backoff)),
         int(rate_limited[0]) if rate_limited else 0,
     )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [row],
         "entity string, n_records long, id_checksum long, n_requests long,"
         " n_failed_retried long, n_rate_limited long, backoff_base_s long,"
@@ -732,7 +734,8 @@ def rest_config_fanout_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         by_entity["customers"].n,
         by_entity["customers"].sc,
     )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [row],
         "entities_csv string, id_field_customers string,"
         " id_field_events string, dt_field_events string,"

@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf, udtf
 
 from ..catalog import load_table
+from .materialize import local_relation
 from .registry import query
 
 
@@ -326,7 +327,8 @@ def pipeline_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "noop"
     ).mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(m["n_input"], m["n_kept"], m["kept_revenue"])],
         "n_input long, n_kept long, kept_revenue double",
     )

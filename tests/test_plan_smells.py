@@ -318,21 +318,33 @@ def test_exchange_reuse_backs_scan_allowlist(spark, name):
 
 
 def test_no_direct_collect_into_createdataframe():
-    """The driver-side result-materialization idiom
-    (createDataFrame(df.collect(), ...)) silently assumes a driver-sized
-    result; plans/materialize.py::materialize_result is its ONE allowed
-    spelling (explicit row ceiling, fails loudly on data-sized results).
-    Any direct use in an engine module is a scale smell."""
+    """plans/materialize.py is the ONE module in plans/ and operators/
+    that builds a DataFrame from driver-side data. Its local_relation
+    builds one over an Arrow table, which Spark answers in the JVM; a
+    direct createDataFrame(rows, schema) plans a Scan ExistingRDD whose
+    action starts Python worker tasks. Its materialize_result adds the
+    row ceiling that keeps the createDataFrame(df.collect(), ...) idiom
+    out of data-sized paths. Any createDataFrame( elsewhere in plans/ or
+    operators/ fails, and so does the collect idiom anywhere in the
+    package."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "mk_kafka_connect_spark"
-    pat = re.compile(r"createDataFrame\(\s*[\w.]+\.collect\(\)", re.S)
+    collect_idiom = re.compile(r"createDataFrame\(\s*[\w.]+\.collect\(\)", re.S)
+    direct_banned = (pkg / "plans", pkg / "operators")
     offenders = [
         str(p.relative_to(pkg.parent))
         for p in sorted(pkg.rglob("*.py"))
-        if p.name != "materialize.py" and pat.search(p.read_text())
+        if p.name != "materialize.py"
+        and (
+            collect_idiom.search(p.read_text())
+            or (
+                any(d in p.parents for d in direct_banned)
+                and "createDataFrame(" in p.read_text()
+            )
+        )
     ]
     assert not offenders, (
-        f"direct collect-into-createDataFrame in {offenders}; "
-        "use plans.materialize.materialize_result"
+        f"direct createDataFrame in {offenders}; use "
+        "plans.materialize.local_relation or materialize_result"
     )
