@@ -69,34 +69,46 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a
     cluster, leave it unset and let spark-submit provide it.
+
+    Python DataSource / UDF workers are separate processes that must
+    import this package. Locally its parent directory goes on
+    ``spark.executorEnv.PYTHONPATH`` (merged with any caller value), so it
+    reaches the workers even when an earlier session in this process
+    started the JVM, and into ``os.environ`` for a JVM started here; the
+    executor workers start from ``worker_daemon``. On a cluster, ship the
+    package with --py-files.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    # Python DataSource / UDF workers are separate processes that must be
-    # able to import this package. Locally, exporting PYTHONPATH covers the
-    # spawned workers; on a cluster, ship the package with --py-files (this
-    # is a no-op there).
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_parent not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{pkg_parent}{os.pathsep}{existing}" if existing else pkg_parent
-        )
+    os.environ["PYTHONPATH"] = _with_path(pkg_parent, os.environ.get("PYTHONPATH", ""))
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
     conf = dict(DEFAULT_CONFIG)
-    if master.startswith("local"):
+    local = master.startswith("local")
+    if local:
         # Single-JVM mode: the driver is the only executor; give it room.
         conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        conf["spark.python.daemon.module"] = "mk_kafka_connect_spark.worker_daemon"
     if extra_conf:
         conf.update(extra_conf)
+    if local:
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = _with_path(pkg_parent, conf.get(key, ""))
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _with_path(entry: str, path: str) -> str:
+    """``path`` (an ``os.pathsep`` list) with ``entry`` first unless present."""
+    if entry in path.split(os.pathsep):
+        return path
+    return f"{entry}{os.pathsep}{path}" if path else entry
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -106,7 +118,7 @@ def ship_package(spark: SparkSession) -> None:
     The Python DataSource readers/writers are module-level classes, so
     workers unpickle them BY REFERENCE and must import
     ``mk_kafka_connect_spark`` themselves. ``get_spark`` covers that by
-    exporting PYTHONPATH before the JVM starts — but an externally
+    putting the package on the workers' PYTHONPATH — but an externally
     created session (the round driver, a notebook, spark-submit without
     --py-files) has no such guarantee, and the failure is a deep
     worker-side ModuleNotFoundError. This zips the package once per

@@ -72,6 +72,7 @@ from pyspark.sql.types import (
 )
 
 from ..streaming.incremental import INITIAL_LOAD, EntityState
+from ..worker_daemon import stable_archives
 from .config import DATETIME_FMT, RestSourceConfig
 from .rest_client import RestClient
 
@@ -304,6 +305,10 @@ class PaginatedRestDataSource(DataSource):
         return cfg
 
     def reader(self, schema: StructType) -> DataSourceReader:
+        # Runs in Spark's planner workers, which ignore
+        # spark.python.daemon.module: a reused worker's next task then
+        # skips re-reading Spark's archives (see worker_daemon).
+        stable_archives()
         return _RestBatchReader(self._config(), dict(self.options))
 
     def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
@@ -329,6 +334,7 @@ def register(spark) -> None:
 
     from pyspark import cloudpickle
 
+    from .. import worker_daemon as _worker_daemon
     from ..session import ship_package
     from ..streaming import incremental as _incremental
     from . import config as _config
@@ -358,7 +364,9 @@ def register(spark) -> None:
             spark.conf.set(key, "true")
 
     ship_package(spark)  # task workers unpickle the reader by reference
-    for module in (sys.modules[__name__], _config, _rest_client, _incremental):
+    for module in (
+        sys.modules[__name__], _config, _rest_client, _incremental, _worker_daemon
+    ):
         cloudpickle.register_pickle_by_value(module)
     if not registered:
         # The JVM checks the name against the ACTIVE session's sources, so
