@@ -26,8 +26,11 @@ the k bit positions in vectorized numpy — no Python-per-row work.
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -36,23 +39,10 @@ __all__ = ["build_bloom_bits", "bloom_prefilter_join"]
 
 _U64 = np.uint64
 
-
-def _worker_safe(spark) -> None:
-    """The build/probe closures call this module's hash helpers, which
-    cloudpickle serializes BY REFERENCE — a worker spawned by an
-    externally built session (the round driver, spark-submit without
-    --py-files) cannot import this package and dies with a deep
-    ModuleNotFoundError (the exact rest_source.register failure mode).
-    Ship the package zip AND register this module for by-value pickling;
-    both are idempotent and cost nothing after the first call."""
-    import sys
-
-    import cloudpickle
-
-    from ..session import ship_package
-
-    ship_package(spark)
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+# The build and probe closures call this module's hash helpers; workers
+# of a session this package did not build cannot import it, so the
+# helpers travel by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -88,7 +78,6 @@ def build_bloom_bits(
     """
     if num_bits % 8:
         raise ValueError("num_bits must be a multiple of 8")
-    _worker_safe(df.sparkSession)
 
     def partial_bitmaps(batches):
         # Boolean scatter + one little-endian packbits: same bit layout
@@ -128,7 +117,6 @@ def bloom_prefilter_join(
     real join. The bitmap rides an executor broadcast; the probe is one
     Arrow-vectorized pandas UDF over the already-JVM-computed xxhash64.
     """
-    _worker_safe(fact.sparkSession)
     bits = build_bloom_bits(dim, on, num_bits=num_bits, num_hashes=num_hashes)
     bc = fact.sparkSession.sparkContext.broadcast(bits)
 

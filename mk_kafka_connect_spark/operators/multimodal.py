@@ -19,9 +19,11 @@ before any decode work runs.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +37,10 @@ __all__ = [
     "decode_image",
     "decode_audio",
 ]
+
+# Workers of a session this package did not build cannot import it, so
+# the module-level batch functions below travel by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 FEATURE_SCHEMA = (
     "doc_id long, mime string, n_bytes long, header_hex string, "
@@ -82,15 +88,8 @@ def fake_decode_features(bin_df: DataFrame) -> DataFrame:
 
     Input schema: (doc_id, payload binary, meta struct<mime,n_bytes>).
 
-    ``_fake_decode_batch`` is a MODULE-LEVEL function, so cloudpickle
-    serializes it by reference and the Python worker must import this
-    package — which fails under the round driver's environment (no
-    PYTHONPATH export; the rest_source failure mode). Ship the package
-    zip to workers first; the closure-based kernels (resize, ahash)
-    don't need it, but this one does."""
-    from ..session import ship_package
-
-    ship_package(bin_df.sparkSession)
+    ``_fake_decode_batch`` is a module-level function; this module is
+    pickled by value, so workers that cannot import the package run it."""
     flat = bin_df.select("doc_id", "payload", F.col("meta.mime").alias("mime"))
     return flat.mapInPandas(_fake_decode_batch, schema=FEATURE_SCHEMA)
 

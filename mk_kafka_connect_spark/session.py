@@ -70,13 +70,13 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a
     cluster, leave it unset and let spark-submit provide it.
 
-    Python DataSource / UDF workers are separate processes that must
-    import this package. Locally its parent directory goes on
+    Local executor Python workers start from ``worker_daemon``, so they
+    must import this package: its parent directory goes on
     ``spark.executorEnv.PYTHONPATH`` (merged with any caller value), so it
     reaches the workers even when an earlier session in this process
-    started the JVM, and into ``os.environ`` for a JVM started here; the
-    executor workers start from ``worker_daemon``. On a cluster, ship the
-    package with --py-files.
+    started the JVM, and into ``os.environ`` for a JVM started here. The
+    engine code those workers run reaches them by value, as in any other
+    session. On a cluster, ship the package with --py-files.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -109,41 +109,3 @@ def _with_path(entry: str, path: str) -> str:
     if entry in path.split(os.pathsep):
         return path
     return f"{entry}{os.pathsep}{path}" if path else entry
-
-
-def ship_package(spark: SparkSession) -> None:
-    """Make this package importable inside Spark's Python WORKER
-    processes regardless of how the session was built.
-
-    The Python DataSource readers/writers are module-level classes, so
-    workers unpickle them BY REFERENCE and must import
-    ``mk_kafka_connect_spark`` themselves. ``get_spark`` covers that by
-    putting the package on the workers' PYTHONPATH — but an externally
-    created session (the round driver, a notebook, spark-submit without
-    --py-files) has no such guarantee, and the failure is a deep
-    worker-side ModuleNotFoundError. This zips the package once per
-    SparkContext and ships it with ``addPyFile`` (workers prepend
-    shipped archives to sys.path) — the same mechanism --py-files uses,
-    done lazily and idempotently. Call it before registering any Python
-    DataSource; a few-hundred-KB zip, built once per context and
-    deleted when the interpreter exits.
-    """
-    sc = spark.sparkContext
-    if getattr(sc, "_mkkc_pkg_shipped", False):
-        return
-    import atexit
-    import shutil
-    import tempfile
-
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    parent = os.path.dirname(pkg_root)
-    zip_dir = tempfile.mkdtemp(prefix="mkkc_pyfiles_")
-    # Removed at interpreter exit, not after addPyFile: on a cluster the
-    # driver's file server keeps serving this path to new executors.
-    atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
-    base = os.path.join(zip_dir, "mk_kafka_connect_spark_pkg")
-    zip_path = shutil.make_archive(
-        base, "zip", root_dir=parent, base_dir="mk_kafka_connect_spark"
-    )
-    sc.addPyFile(zip_path)
-    sc._mkkc_pkg_shipped = True

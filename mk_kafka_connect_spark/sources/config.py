@@ -10,7 +10,6 @@ dataclass with the same validation semantics:
 * batch size clamped to [1, 500] (``Config.java:53-58``)
 * strict ``YYYY-MM-DD HH:MM:SS`` initial-datetime validation
   (``Config.java:210-227``)
-* timezone pinning for all datetime-string comparison (``Config.java:64-68``)
 """
 
 from __future__ import annotations
@@ -46,12 +45,8 @@ class RestSourceConfig:
     username: str = ""
     password: str = ""
     entities: list[str] = field(default_factory=lambda: ["customer"])
-    topic_prefix: str = "rest"
     batch_size: int = 500
     max_retries: int = 3
-    poll_interval_ms: int = 60_000
-    timezone: str = "UTC"
-    incremental_cron: str = "0 0 0 * * ?"  # Quartz 6-field; Config.java:59-63
     datetime_fields: dict[str, str] = field(default_factory=dict)
     id_fields: dict[str, str] = field(default_factory=dict)
     initial_datetimes: dict[str, str] = field(default_factory=dict)
@@ -96,12 +91,8 @@ class RestSourceConfig:
             username=options.get("username", ""),
             password=options.get("password", ""),
             entities=parse_csv(options.get("entities", "customer")),
-            topic_prefix=options.get("topic.prefix", "rest"),
             batch_size=int(options.get("batch.size", "500")),
             max_retries=int(options.get("max.retries", "3")),
-            poll_interval_ms=int(options.get("poll.interval.ms", "60000")),
-            timezone=options.get("timezone", "UTC"),
-            incremental_cron=options.get("incremental.schedule.cron", "0 0 0 * * ?"),
             datetime_fields=parse_entity_map(options.get("incremental.datetime.fields", ""))
             if options.get("incremental.datetime.fields")
             else {},

@@ -184,20 +184,12 @@ class RestSinkDataSource(DataSource):
 
 
 def register_sink(spark) -> None:
+    """Register ``rest_sink`` on ``spark`` so that it works from any
+    session: this module and ``rest_client`` are pickled by value
+    (``sources._register_python_source``). Idempotent per session."""
     import sys
 
-    from pyspark import cloudpickle
-
+    from . import _register_python_source
     from . import rest_client as _rest_client
-    from ..session import ship_package
 
-    registered = getattr(spark, "_mkkc_rest_sink_registered", False)
-    ship_package(spark)  # batch-task workers unpickle the writer by reference
-    # The STREAMING commit path runs in a helper process that ignores
-    # addPyFile (same failure mode as the stream reader, see
-    # rest_source.register): serialize these modules by value.
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    cloudpickle.register_pickle_by_value(_rest_client)
-    if not registered:
-        spark.dataSource.register(RestSinkDataSource)
-        spark._mkkc_rest_sink_registered = True
+    _register_python_source(spark, RestSinkDataSource, (sys.modules[__name__], _rest_client))

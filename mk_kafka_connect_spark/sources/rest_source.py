@@ -215,6 +215,9 @@ class _RestBatchReader(DataSourceReader):
         ]
 
     def read(self, partition: _EntityPartition) -> Iterator[tuple]:
+        # Runs in an executor worker: a no-op where worker_daemon already
+        # ran, else the worker's later tasks skip re-reading the archives.
+        stable_archives()
         return _fetch_rows(
             self.cfg,
             partition.entity,
@@ -289,7 +292,7 @@ class PaginatedRestDataSource(DataSource):
     """``format("paginated_rest")`` — options mirror the reference's
     property names (url, entities, batch.size, max.retries,
     incremental.datetime.fields, entity.id.fields, initial.datetimes,
-    entity.query.params, topic.prefix...)."""
+    entity.query.params...)."""
 
     @classmethod
     def name(cls) -> str:
@@ -316,32 +319,22 @@ class PaginatedRestDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the DataSource so it works from ANY session, not just
-    ``get_spark``-built ones: task workers get the package via an
-    ``addPyFile`` zip (``ship_package``), and the STREAMING source runner
-    — a separate helper process that inherits only the JVM's startup env
-    and ignores addPyFile — gets the reader by registering these modules
-    for BY-VALUE cloudpickle serialization (the upstream-recommended
-    pattern for Python data sources outside a packaged deploy). Without
-    both, an externally created session (the round driver, spark-submit
-    sans --py-files) dies with a worker-side ModuleNotFoundError.
-
-    Idempotent per session: every rest_* query calls this, but
-    re-registering the same name makes DataSourceManager log a noisy
-    'replaced a previously registered data source' warning per call, so
-    repeat calls on an already-registered session are a no-op."""
+    """Register ``paginated_rest`` on ``spark`` so that it works from any
+    session, not just ``get_spark``-built ones: this module and every
+    package module its worker-side code reaches are pickled by value
+    (``sources._register_python_source``). Idempotent per session; every
+    rest_* query calls it."""
     import sys
 
-    from pyspark import cloudpickle
-
     from .. import worker_daemon as _worker_daemon
-    from ..session import ship_package
     from ..streaming import incremental as _incremental
+    from . import _register_python_source
     from . import config as _config
     from . import rest_client as _rest_client
 
-    registered = getattr(spark, "_mkkc_rest_source_registered", False)
-
+    modules = (sys.modules[__name__], _config, _rest_client, _incremental, _worker_daemon)
+    if not _register_python_source(spark, PaginatedRestDataSource, modules):
+        return
     # _RestBatchReader implements pushFilters; Spark REFUSES to plan a
     # pushdown-capable Python DataSource while the feature flag is off
     # (DATA_SOURCE_PUSHDOWN_DISABLED), so enabling it here is part of
@@ -350,35 +343,14 @@ def register(spark) -> None:
     # session, not just this one. Set it only on first registration and
     # only if the session has not already pinned a value (ADVICE r16),
     # so an operator's explicit `false` is never silently overridden.
-    if not registered:
-        key = "spark.sql.python.filterPushdown.enabled"
-        try:
-            # conf.get() can't distinguish "unset" from the SQLConf
-            # default ("false"); the session's explicit-settings map can.
-            explicitly_set = bool(
-                spark._jsparkSession.sessionState().conf().settings().containsKey(key)
-            )
-        except Exception:  # noqa: BLE001  # internal API moved: old behavior
-            explicitly_set = False
-        if not explicitly_set:
-            spark.conf.set(key, "true")
-
-    ship_package(spark)  # task workers unpickle the reader by reference
-    for module in (
-        sys.modules[__name__], _config, _rest_client, _incremental, _worker_daemon
-    ):
-        cloudpickle.register_pickle_by_value(module)
-    if not registered:
-        # The JVM checks the name against the ACTIVE session's sources, so
-        # a second session (spark.newSession()) registers while active.
-        jvm = spark._jvm.SparkSession
-        active = jvm.getActiveSession()
-        jvm.setActiveSession(spark._jsparkSession)
-        try:
-            spark.dataSource.register(PaginatedRestDataSource)
-        finally:
-            if active.isDefined():
-                jvm.setActiveSession(active.get())
-            else:
-                jvm.clearActiveSession()
-        spark._mkkc_rest_source_registered = True
+    key = "spark.sql.python.filterPushdown.enabled"
+    try:
+        # conf.get() can't distinguish "unset" from the SQLConf
+        # default ("false"); the session's explicit-settings map can.
+        explicitly_set = bool(
+            spark._jsparkSession.sessionState().conf().settings().containsKey(key)
+        )
+    except Exception:  # noqa: BLE001  # internal API moved: old behavior
+        explicitly_set = False
+    if not explicitly_set:
+        spark.conf.set(key, "true")

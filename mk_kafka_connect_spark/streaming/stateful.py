@@ -7,14 +7,20 @@ bookkeeping like the reference's EntityState, ``ChargeOverSourceTask.java:34-52`
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 __all__ = ["running_user_stats"]
+
+# Workers of a session this package did not build cannot import it, so
+# ``_update`` travels by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 OUTPUT_SCHEMA = "user_id long, n_seen long, max_value double, total_value double"
 STATE_SCHEMA = "n long, mx double, total double"
@@ -52,16 +58,8 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     group state; emits the updated row per key per micro-batch. State is
     O(keys) — the scale knob is key cardinality, not event volume.
 
-    ``_update`` is a module-level function, so cloudpickle serializes it
-    BY REFERENCE — task workers must be able to import the package. In a
-    session built without PYTHONPATH (the round driver, spark-submit
-    sans --py-files) that import fails with ModuleNotFoundError, so ship
-    the package zip first (same device as the multimodal/bloom kernels;
-    nested-closure UDFs elsewhere dodge this because cloudpickle
-    serializes closures by value)."""
-    from ..session import ship_package
-
-    ship_package(events.sparkSession)
+    ``_update`` is a module-level function; this module is pickled by
+    value, so workers that cannot import the package run it."""
     return (
         events.select("user_id", "value")
         .groupBy("user_id")

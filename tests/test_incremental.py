@@ -236,12 +236,11 @@ def test_driver_and_stream_reader_agree_on_state(tmp_path):
     from dataclasses import asdict
 
     from mk_kafka_connect_spark.sources.config import RestSourceConfig
+    from mk_kafka_connect_spark.sources.fake_server import FakeRestServer
     from mk_kafka_connect_spark.sources.rest_source import (
         _fetch_rows,
         _RestStreamReader,
     )
-
-    from .fake_rest_server import FakeRestServer
 
     data = {
         e: [

@@ -5,17 +5,13 @@ streaming — the full reference deployment in one config object."""
 from __future__ import annotations
 
 import json
-import os
-import subprocess
-import sys
 import urllib.parse
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
 from mk_kafka_connect_spark.pipeline import CdcPipeline
-
-from .fake_rest_server import FakeRestServer
+from mk_kafka_connect_spark.sources.fake_server import FakeRestServer
 
 
 def _rows(entity: str, n: int):
@@ -295,22 +291,3 @@ def test_incremental_driver_over_read_batch(spark, tmp_path):
         entities, last_end
     )
 
-
-def test_ship_package_removes_its_zip_at_exit():
-    """The shipped package zip lives until the interpreter exits (a
-    cluster driver's file server serves it from that path), then goes."""
-    code = (
-        "from mk_kafka_connect_spark.session import ship_package\n"
-        "class Ctx:\n"
-        "    def addPyFile(self, path): print(path)\n"
-        "class Session: sparkContext = Ctx()\n"
-        "ship_package(Session())\n"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    res = subprocess.run(
-        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=120
-    )
-    assert res.returncode == 0, res.stderr
-    zip_path = res.stdout.strip()
-    assert os.path.basename(os.path.dirname(zip_path)).startswith("mkkc_pyfiles_")
-    assert not os.path.exists(os.path.dirname(zip_path))

@@ -348,3 +348,21 @@ def test_no_direct_collect_into_createdataframe():
         f"direct createDataFrame in {offenders}; use "
         "plans.materialize.local_relation or materialize_result"
     )
+
+
+def test_engine_code_reaches_workers_by_value_only():
+    """Engine code reaches Python workers one way: its modules are pickled
+    by value through PySpark's own ``pyspark.cloudpickle``. The standalone
+    cloudpickle package keeps a registry PySpark never reads, and an
+    ``addPyFile`` zip reaches task workers but not the streaming source
+    runner, so neither may come back into the package."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "mk_kafka_connect_spark"
+    banned = re.compile(r"ship_package|addPyFile\(|^\s*(?:import|from) cloudpickle\b", re.M)
+    offenders = [
+        f"{p.relative_to(pkg.parent)}: {m.group(0).strip()}"
+        for p in sorted(pkg.rglob("*.py"))
+        for m in banned.finditer(p.read_text())
+    ]
+    assert not offenders, offenders

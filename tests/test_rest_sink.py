@@ -6,9 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
+from mk_kafka_connect_spark.sources.fake_server import FakeRestServer
 from mk_kafka_connect_spark.sources.rest_sink import _RestSinkWriter, register_sink
-
-from .fake_rest_server import FakeRestServer
 
 
 def test_rest_sink_end_to_end_spark_write(spark):
@@ -29,6 +28,25 @@ def test_rest_sink_end_to_end_spark_write(spark):
         posts = [r for r in srv.requests if r.startswith("POST")]
         # 23 rows over 2 partitions at batch.size=5 → 5 or 6 requests.
         assert 5 <= len(posts) <= 6
+
+
+def test_register_sink_on_a_second_session(spark):
+    """A spark.newSession() registers the sink too (the JVM checks the
+    name against the active session's sources) and writes through it."""
+    register_sink(spark)
+    other = spark.newSession()
+    register_sink(other)
+    with FakeRestServer({}) as srv:
+        (
+            other.range(0, 4)
+            .write.format("rest_sink")
+            .option("url", srv.url)
+            .option("entity", "second")
+            .mode("append")
+            .save()
+        )
+        posted = srv.posted["second"]
+    assert sorted(int(r["id"]) for r in posted) == [0, 1, 2, 3]
 
 
 def test_rest_sink_retries_500_with_backoff():

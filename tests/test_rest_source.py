@@ -9,10 +9,9 @@ import json
 import pytest
 
 from mk_kafka_connect_spark.sources.config import RestSourceConfig, parse_entity_map
+from mk_kafka_connect_spark.sources.fake_server import FakeRestServer
 from mk_kafka_connect_spark.sources.rest_client import RestClient
 from mk_kafka_connect_spark.sources.rest_source import register
-
-from .fake_rest_server import FakeRestServer
 
 
 def _rows(entity: str, n: int, start_day: int = 1):
@@ -258,12 +257,14 @@ def test_streaming_datasource_microbatch(spark, tmp_path):
 
 def test_datasource_works_without_pythonpath():
     """The round driver (and any spark-submit without --py-files) builds
-    its own SparkSession with no PYTHONPATH export, so Python workers and
-    the STREAMING source runner must get this package some other way --
-    ship_package's addPyFile zip for task workers, by-value cloudpickle
-    registration for the stream runner (both wired into register()).
-    Reproduces the exact failure mode in a clean subprocess: before the
-    fix this died with a worker-side ModuleNotFoundError."""
+    its own SparkSession with no PYTHONPATH export, so its Python workers
+    and the STREAMING source runner cannot import this package: every
+    package module their code reaches must be pickled by value through
+    PySpark's own cloudpickle. Covers both registered DataSources (the
+    sink through rest_roundtrip_events) and the three kernels whose
+    module-level functions run in workers (bloom, multimodal, stateful),
+    in a clean subprocess; a module missing from a by-value registration
+    dies with a worker-side ModuleNotFoundError."""
     import os
     import subprocess
     import sys
@@ -279,9 +280,13 @@ def test_datasource_works_without_pythonpath():
         "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
         "import __spark_entry__ as E\n"
         "qs = E.queries()\n"
-        "n1 = qs['rest_scan_events'](spark, '/root/testdata/sf0.001').count()\n"
-        "n2 = qs['rest_stream_events'](spark, '/root/testdata/sf0.001').count()\n"
+        "sf = '/root/testdata/sf0.001'\n"
+        "n1 = qs['rest_scan_events'](spark, sf).count()\n"
+        "n2 = qs['rest_stream_events'](spark, sf).count()\n"
         "assert n1 == n2 > 0, (n1, n2)\n"
+        "for name in ('rest_roundtrip_events', 'join_bloom_prefilter',\n"
+        "             'multimodal_decode', 'streaming_stateful_running'):\n"
+        "    assert qs[name](spark, sf).collect(), name\n"
         "print('CLEAN_ENV_OK', n1)\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -296,24 +301,26 @@ def test_datasource_works_without_pythonpath():
     assert "CLEAN_ENV_OK" in out.stdout, (out.stdout[-500:], out.stderr[-1500:])
 
 
-def test_register_is_idempotent_per_session(spark):
+def test_register_is_idempotent_per_session(spark, monkeypatch):
     # Every rest_* query calls register(); re-registering the same name
     # makes DataSourceManager log a 'replaced a previously registered
     # data source' warning per call, so repeats must skip the JVM call.
-    from mk_kafka_connect_spark.sources import rest_source
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from mk_kafka_connect_spark.sources import rest_sink, rest_source
 
     calls = []
-    orig = spark.dataSource.register
-    spark.dataSource.register = lambda cls: calls.append(cls) or orig(cls)
-    try:
-        rest_source.register(spark)
-        first = len(calls)
-        rest_source.register(spark)
-        rest_source.register(spark)
-        assert len(calls) == first  # no re-registration after the first
-        assert first <= 1  # at most one real registration in this session
-    finally:
-        spark.dataSource.register = orig
+    orig = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, cls: calls.append(cls.name()) or orig(self, cls),
+    )
+    session = spark.newSession()
+    for _ in range(3):
+        rest_source.register(session)
+        rest_sink.register_sink(session)
+    assert calls == ["paginated_rest", "rest_sink"]
 
 
 # --- Catalyst filter pushdown (Spark 4.1 pushFilters, VERDICT r15 #2) --------

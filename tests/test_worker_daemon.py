@@ -178,3 +178,40 @@ def test_get_spark_after_plain_session_reaches_workers():
         cwd="/tmp",
     )
     assert "RESULT http://h" in out
+
+
+def test_rest_read_keeps_plain_session_worker_archives():
+    """Workers of a session not built by get_spark start from
+    pyspark.daemon; a paginated_rest read makes its executor worker keep
+    Spark's archives, so the worker's next task (here a UDF) finds them
+    behind StableZipImporter."""
+    out = _run(
+        """
+        from pyspark.sql import SparkSession, functions as F
+        from mk_kafka_connect_spark.sources.fake_server import FakeRestServer
+        from mk_kafka_connect_spark.sources.rest_source import register
+
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        register(spark)
+        rows = [{"id": i, "mod_datetime": "2024-01-01 00:00:00"} for i in range(3)]
+        with FakeRestServer({"customer": rows}) as srv:
+            n = len(spark.read.format("paginated_rest").option("url", srv.url)
+                    .option("entities", "customer").load().collect())
+
+        @F.udf("string")
+        def importer_kinds(_):
+            import sys
+
+            return ",".join(sorted({
+                type(v).__name__ for k, v in sys.path_importer_cache.items()
+                if "pyspark.zip" in k
+            }))
+
+        print("RESULT", n, spark.range(1).select(importer_kinds("id")).first()[0])
+        spark.stop()
+        """,
+        None,
+        cwd="/tmp",
+    )
+    assert "RESULT 3 StableZipImporter" in out
