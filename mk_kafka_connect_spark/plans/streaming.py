@@ -238,7 +238,7 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
     ev = SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours")
     views = ev.filter(F.col("event_type") == "view")
     clicks = ev.filter(F.col("event_type") == "click")
-    out = SW.stream_stream_attribution_outer(views, clicks, "6 hours")
+    out = SW.stream_stream_attribution(views, clicks, "6 hours", "leftOuter")
     # Strip the sentinel AFTER the drain, on the batch result. Filtering
     # inside the streaming plan looks equivalent but is not: Catalyst
     # pushes user_id >= 0 below the EventTimeWatermark operators (it's a
@@ -275,7 +275,7 @@ def streaming_stream_stream_right_join(spark: SparkSession, sf_dir: str) -> Data
     ev = SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours")
     views = ev.filter(F.col("event_type") == "view")
     clicks = ev.filter(F.col("event_type") == "click")
-    out = SW.stream_stream_attribution_right_outer(views, clicks, "6 hours")
+    out = SW.stream_stream_attribution(views, clicks, "6 hours", "rightOuter")
     return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
 
 
@@ -306,7 +306,7 @@ def streaming_stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataF
     drain must equal the batch EXISTS oracle row-for-row."""
     views = SW.read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
     clicks = SW.read_events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
-    out = SW.stream_stream_attribution_semi(views, clicks, "6 hours")
+    out = SW.stream_stream_attribution(views, clicks, "6 hours", "leftSemi")
     return SW.run_to_memory(out, "append")
 
 
@@ -414,7 +414,7 @@ def streaming_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataF
     ev = SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours")
     views = ev.filter(F.col("event_type") == "view")
     clicks = ev.filter(F.col("event_type") == "click")
-    out = SW.stream_stream_attribution_full_outer(views, clicks, "6 hours")
+    out = SW.stream_stream_attribution(views, clicks, "6 hours", "fullOuter")
     return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
 
 

@@ -19,8 +19,9 @@ __all__ = ["FakeRestServer"]
 class FakeRestServer:
     """Serves ``/api/{entity}`` with limit/offset/where/order params over a
     per-entity row list. ``fail_next(n)`` makes the next n requests return
-    HTTP 500; ``rate_limit_next(n)`` returns 429s. Thread-safe enough for
-    single-test use."""
+    HTTP 500; ``rate_limit_next(n)`` returns 429s. Both counters are read
+    and decremented under one lock, so concurrent requests never share a
+    scripted fault."""
 
     def __init__(self, data: dict[str, list[dict]]):
         self.data = data
@@ -35,17 +36,26 @@ class FakeRestServer:
             def log_message(self, *a):  # silence
                 pass
 
+            def _faulted(self, logged: str) -> bool:
+                """Log the request and answer it with the next scripted
+                fault, if any: HTTP 500s first, then 429s."""
+                with outer._lock:
+                    outer.requests.append(logged)
+                    status = None
+                    if outer._fail > 0:
+                        outer._fail -= 1
+                        status = 500
+                    elif outer._limit > 0:
+                        outer._limit -= 1
+                        status = 429
+                if status is None:
+                    return False
+                self.send_response(status)
+                self.end_headers()
+                return True
+
             def do_GET(self):  # noqa: N802
-                outer.requests.append(self.path)
-                if outer._fail > 0:
-                    outer._fail -= 1
-                    self.send_response(500)
-                    self.end_headers()
-                    return
-                if outer._limit > 0:
-                    outer._limit -= 1
-                    self.send_response(429)
-                    self.end_headers()
+                if self._faulted(self.path):
                     return
                 parsed = urllib.parse.urlparse(self.path)
                 entity = parsed.path.rstrip("/").split("/")[-1]
@@ -82,16 +92,7 @@ class FakeRestServer:
                 self.wfile.write(body)
 
             def do_POST(self):  # noqa: N802
-                outer.requests.append("POST " + self.path)
-                if outer._fail > 0:
-                    outer._fail -= 1
-                    self.send_response(500)
-                    self.end_headers()
-                    return
-                if outer._limit > 0:
-                    outer._limit -= 1
-                    self.send_response(429)
-                    self.end_headers()
+                if self._faulted("POST " + self.path):
                     return
                 entity = urllib.parse.urlparse(self.path).path.rstrip("/").split("/")[-1]
                 n = int(self.headers.get("Content-Length", 0))
@@ -123,10 +124,12 @@ class FakeRestServer:
         return True
 
     def fail_next(self, n: int) -> None:
-        self._fail = n
+        with self._lock:
+            self._fail = n
 
     def rate_limit_next(self, n: int) -> None:
-        self._limit = n
+        with self._lock:
+            self._limit = n
 
     @property
     def url(self) -> str:

@@ -10,9 +10,13 @@ semantics (``ChargeOverApiClient.java:80-183`` + ``ChargeOverSourceTask.java:294
   ``2^attempt × 1 s + 10 % jitter`` capped at 30 s (``Task.java:329-337``);
   HTTP 429 waits a fixed 60 s (``Task.java:314-324``)
 * connection test: one-row probe, success = HTTP 200 (``ApiClient.java:185-209``)
+* ``post``: the REST sink's ``{"records": [...]}`` POST, through the same
+  request and retry loop as the page fetch
 
 Pure stdlib (urllib) so it runs inside DataSource partitions on any
-executor. ``sleeper`` is injectable for tests.
+executor. ``sleeper`` is the one place to inject the backoff and
+rate-limit waits in tests. Spark pickles the sink writer, and the client
+it holds, to executors, so every default stays picklable.
 """
 
 from __future__ import annotations
@@ -57,6 +61,8 @@ class RestClient:
         sleeper: Callable[[float], None] = time.sleep,
         rng: random.Random | None = None,
     ) -> None:
+        if max_retries < 0:
+            raise ValueError("max_retries must be >= 0")
         self.base_url = base_url.rstrip("/")
         self.username = username
         self.password = password
@@ -99,8 +105,12 @@ class RestClient:
 
     # -- execution --------------------------------------------------------
 
-    def _request(self, url: str) -> list[dict]:
-        req = urllib.request.Request(url)
+    def _request(self, url: str, body: bytes | None = None):
+        """One GET, or a JSON POST when ``body`` is given; returns the
+        decoded JSON response (None for an empty body)."""
+        req = urllib.request.Request(url, data=body)
+        if body is not None:
+            req.add_header("Content-Type", "application/json")
         if self.username or self.password:
             tok = base64.b64encode(
                 f"{self.username}:{self.password}".encode()
@@ -108,17 +118,30 @@ class RestClient:
             req.add_header("Authorization", f"Basic {tok}")
         try:
             with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
-                body = resp.read().decode("utf-8")
+                text = resp.read().decode("utf-8")
         except urllib.error.HTTPError as e:
             if e.code == 429:  # ApiClient.java:169-171
                 raise RateLimitError(url) from e
             raise
-        parsed = json.loads(body) if body.strip() else []
-        if isinstance(parsed, dict):  # {"response": [...]} envelope
-            parsed = parsed.get("response", [])
-        if not isinstance(parsed, list):
-            raise ValueError(f"unexpected response shape from {url}")
-        return parsed
+        return json.loads(text) if text.strip() else None
+
+    def _with_retry(self, call: Callable, *args, **kwargs):
+        """Task.java:294-343: general errors → exponential backoff with
+        10% jitter capped at 30 s; 429 → fixed 60 s wait; give up after
+        max_retries retries."""
+        for attempt in range(self.max_retries + 1):
+            try:
+                return call(*args, **kwargs)
+            except RateLimitError:
+                if attempt == self.max_retries:
+                    raise
+                self.sleep(RATE_LIMIT_WAIT_S)
+            except Exception:  # noqa: BLE001 - retry everything like the reference
+                if attempt == self.max_retries:
+                    raise
+                base = min(2**attempt * 1.0, BACKOFF_CAP_S)
+                jitter = base * 0.1 * self.rng.random()  # Task.java:334-336
+                self.sleep(min(base + jitter, BACKOFF_CAP_S))
 
     def fetch_page(
         self,
@@ -133,7 +156,11 @@ class RestClient:
         url = self.build_url(
             entity, datetime_field, start_datetime, end_datetime, offset, limit, extra_params
         )
-        records = self._request(url)
+        records = self._request(url) or []
+        if isinstance(records, dict):  # {"response": [...]} envelope
+            records = records.get("response", [])
+        if not isinstance(records, list):
+            raise ValueError(f"unexpected response shape from {url}")
         return FetchResult(
             records=records,
             has_more=len(records) == limit,  # ApiClient.java:163-167
@@ -141,24 +168,13 @@ class RestClient:
         )
 
     def fetch_page_with_retry(self, *args, **kwargs) -> FetchResult:
-        """Task.java:294-343: general errors → exponential backoff with
-        10% jitter capped at 30 s; 429 → fixed 60 s wait; give up after
-        max_retries attempts."""
-        last: Exception | None = None
-        for attempt in range(self.max_retries + 1):
-            try:
-                return self.fetch_page(*args, **kwargs)
-            except RateLimitError as e:
-                last = e
-                if attempt < self.max_retries:
-                    self.sleep(RATE_LIMIT_WAIT_S)
-            except Exception as e:  # noqa: BLE001 - retry everything like the reference
-                last = e
-                if attempt < self.max_retries:
-                    base = min(2**attempt * 1.0, BACKOFF_CAP_S)
-                    jitter = base * 0.1 * self.rng.random()  # Task.java:334-336
-                    self.sleep(min(base + jitter, BACKOFF_CAP_S))
-        raise last  # type: ignore[misc]
+        return self._with_retry(self.fetch_page, *args, **kwargs)
+
+    def post(self, entity: str, records: list[dict]):
+        """POST ``{"records": [...]}`` to ``{base_url}/{entity}`` with the
+        same retry contract as the page fetch."""
+        body = json.dumps({"records": records}, default=str).encode()
+        return self._with_retry(self._request, f"{self.base_url}/{entity}", body)
 
     def fetch_all(
         self,

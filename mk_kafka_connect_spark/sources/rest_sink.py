@@ -4,11 +4,11 @@ The reference is source-only; SURVEY.md §4 names the outbound half — a
 rate-limited REST sink — as the one optional custom DataSource. Each
 task serializes its partition into ``batch.size``-record JSON POSTs
 (``{"records": [...]}``) against ``{url}/{entity}``, throttled by a
-token-interval limiter and retried with the SAME backoff contract as the
-source client (general errors → exponential backoff, 10% jitter, 30 s
-cap; HTTP 429 → fixed 60 s wait; give up after ``max.retries`` —
-``Task.java:294-343`` semantics, shared constants with
-``rest_client.py``).
+token-interval limiter and sent through one ``rest_client.RestClient``
+per writer, so each POST takes the source's own request and retry loop
+(general errors → exponential backoff, 10% jitter, 30 s cap; HTTP 429 →
+fixed 60 s wait; give up after ``max.retries`` — ``Task.java:294-343``
+semantics).
 
 Delivery semantics: at-least-once. Spark retries failed tasks, so a
 batch can be re-POSTed; pair with a keyed payload (the CDC key from
@@ -21,9 +21,7 @@ so size one knob from the other.
 
 from __future__ import annotations
 
-import json
 import time
-import urllib.request
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -35,7 +33,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .rest_client import BACKOFF_CAP_S, RATE_LIMIT_WAIT_S, RateLimitError
+from .rest_client import RestClient
 
 __all__ = ["RestSinkDataSource", "register_sink"]
 
@@ -48,58 +46,20 @@ class _SinkCommit(WriterCommitMessage):
 
 class _RestSinkWriter(DataSourceWriter):
     def __init__(self, options: dict):
-        self.url = (options.get("url") or "").rstrip("/")
-        if not self.url:
+        url = (options.get("url") or "").rstrip("/")
+        if not url:
             raise ValueError("rest sink requires option 'url'")
         self.entity = options.get("entity") or "records"
         self.batch_size = int(options.get("batch.size", "100"))
         if not 1 <= self.batch_size <= 500:
             raise ValueError("batch.size must be in [1, 500]")  # Config.java parity
         self.rps = float(options.get("requests.per.second", "0")) or None
-        self.max_retries = int(options.get("max.retries", "3"))
-        self.timeout_s = float(options.get("request.timeout.seconds", "30"))
-        # injectable for tests
-        self.sleep = time.sleep
-        self.clock = time.monotonic
-
-    # -- one POST with the shared retry contract --------------------------
-
-    def _post_once(self, body: bytes, entity: str | None = None) -> None:
-        req = urllib.request.Request(
-            f"{self.url}/{entity or self.entity}",
-            data=body,
-            headers={"Content-Type": "application/json"},
-            method="POST",
+        self.client = RestClient(
+            url,
+            timeout_s=float(options.get("request.timeout.seconds", "30")),
+            max_retries=int(options.get("max.retries", "3")),
         )
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout_s):
-                pass
-        except urllib.error.HTTPError as e:
-            if e.code == 429:
-                raise RateLimitError(self.url) from e
-            raise
-
-    def _post_with_retry(
-        self, body: bytes, rng_seed: int, entity: str | None = None
-    ) -> None:
-        import random
-
-        rng = random.Random(rng_seed)  # deterministic jitter per batch
-        last: Exception | None = None
-        for attempt in range(self.max_retries + 1):
-            try:
-                self._post_once(body, entity)
-                return
-            except RateLimitError as e:
-                last = e
-                if attempt < self.max_retries:
-                    self.sleep(RATE_LIMIT_WAIT_S)
-            except Exception as e:  # noqa: BLE001 - retry everything like the reference
-                last = e
-                if attempt < self.max_retries:
-                    base = min(2**attempt * 1.0, BACKOFF_CAP_S)
-                    self.sleep(min(base + base * 0.1 * rng.random(), BACKOFF_CAP_S))
-        raise last  # type: ignore[misc]
+        self.clock = time.monotonic  # injectable for tests; sleeps go through client.sleep
 
     # -- partition write ---------------------------------------------------
 
@@ -116,10 +76,9 @@ class _RestSinkWriter(DataSourceWriter):
             if min_interval:
                 now = self.clock()
                 if now < next_allowed:
-                    self.sleep(next_allowed - now)
+                    self.client.sleep(next_allowed - now)
                 next_allowed = max(next_allowed, now) + min_interval
-            body = json.dumps({"records": batch}, default=str).encode()
-            self._post_with_retry(body, rng_seed=n_requests)
+            self.client.post(self.entity, batch)
             n_records += len(batch)
             n_requests += 1
             batch = []
@@ -159,8 +118,7 @@ class _RestStreamSinkWriter(_RestSinkWriter, DataSourceStreamWriter):
             "n_records": sum(m.n_records for m in messages if m),
             "n_requests": sum(m.n_requests for m in messages if m),
         }
-        body = json.dumps({"records": [marker]}).encode()
-        self._post_with_retry(body, rng_seed=batchId, entity=f"{self.entity}__commits")
+        self.client.post(f"{self.entity}__commits", [marker])
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803 (Spark API)
         pass  # no marker — the epoch never becomes visible to consumers

@@ -14,6 +14,7 @@ Kafka-fed deployment would run.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -33,10 +34,6 @@ __all__ = [
     "streaming_dedup",
     "stream_static_join",
     "stream_stream_attribution",
-    "stream_stream_attribution_outer",
-    "stream_stream_attribution_full_outer",
-    "stream_stream_attribution_semi",
-    "stream_stream_attribution_right_outer",
     "read_events_stream_with_horizon_sentinel",
 ]
 
@@ -94,27 +91,31 @@ def run_to_memory(
 ) -> DataFrame:
     """Drain a bounded stream with Trigger.AvailableNow into a memory sink
     and return the final table. Unique query name + throwaway checkpoint
-    per run (the driver may call the same query repeatedly)."""
+    per run (the driver may call the same query repeatedly); the memory
+    sink keeps the rows on the driver, so the checkpoint is removed once
+    the drain ends, on the timeout path too."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        try:
-            q.stop()
-        finally:
-            raise TimeoutError(
-                f"streaming drain {name} did not finish within {timeout_s}s;"
-                " the memory sink is incomplete"
-            )
-    spark = result.sparkSession
-    return spark.table(name)
+    try:
+        q = (
+            result.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(timeout_s):
+            try:
+                q.stop()
+            finally:
+                raise TimeoutError(
+                    f"streaming drain {name} did not finish within {timeout_s}s;"
+                    " the memory sink is incomplete"
+                )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return result.sparkSession.table(name)
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -172,9 +173,9 @@ def streaming_dedup(events: DataFrame) -> DataFrame:
 
 
 def stream_stream_attribution(
-    views: DataFrame, clicks: DataFrame, horizon: str = "6 hours"
+    views: DataFrame, clicks: DataFrame, horizon: str = "6 hours", how: str = "inner"
 ) -> DataFrame:
-    """Stream ⋈ stream inner join with event-time bounds (B13): attribute
+    """Stream ⋈ stream attribution with event-time bounds (B13): match
     each click to every view by the same user within the preceding
     ``horizon``. BOTH sides are unbounded, so this is the genuinely
     stateful join — each side buffers rows in state, and the watermark
@@ -182,6 +183,24 @@ def stream_stream_attribution(
     give Spark the bound it needs to evict matched-out state instead of
     keeping both streams forever. The gap is emitted in exact
     microseconds (long), never a float duration.
+
+    ``how`` is Spark's join type, and every mode of the stream-stream
+    matrix is supported:
+
+    * ``inner``: matched pairs only, emitted as they match.
+    * ``leftOuter`` / ``rightOuter`` / ``fullOuter``: unconverted views
+      and/or view-less clicks (the organic conversions) also surface as
+      null-padded rows, but only once the OTHER stream's watermark proves
+      no match can still arrive — correctness rests on state EXPIRY, not
+      just lookup. Feed a bounded replay through
+      ``read_events_stream_with_horizon_sentinel`` so the tail's null
+      rows actually flush (see there).
+    * ``leftSemi``: the existence test — each view at most once, as
+      ``(user_id, view_id, v_ts)``, as soon as its first match is seen;
+      an unmatched view is dropped at state expiry.
+
+    ``user_id`` is ``coalesce(v_user, c_user)``: the join key makes the
+    two equal on a matched row, and an unmatched row has only one side.
     """
     v = views.select(
         F.col("user_id").alias("v_user"),
@@ -198,10 +217,12 @@ def stream_stream_attribution(
         (F.col("v_user") == F.col("c_user"))
         & (F.col("c_ts") > F.col("v_ts"))
         & (F.col("c_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
-        "inner",
+        how,
     )
+    if how == "leftSemi":
+        return joined.select(F.col("v_user").alias("user_id"), "view_id", "v_ts")
     return joined.select(
-        F.col("v_user").alias("user_id"),
+        F.coalesce(F.col("v_user"), F.col("c_user")).alias("user_id"),
         "view_id",
         "click_id",
         (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("gap_us"),
@@ -299,149 +320,6 @@ def read_events_stream_with_horizon_sentinel(
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
     return ev.unionByName(sent)
-
-
-def stream_stream_attribution_outer(
-    views: DataFrame, clicks: DataFrame, horizon: str = "6 hours"
-) -> DataFrame:
-    """LEFT OUTER stream ⋈ stream attribution: like
-    ``stream_stream_attribution`` but views with no click in the horizon
-    surface as null-click rows — the unconverted-impressions side of the
-    funnel. This exercises the OTHER half of the stateful-join contract:
-    matched rows stream out as they match, but a null row can only be
-    emitted once the watermark proves no matching click can still arrive
-    (v_ts + horizon < watermark), i.e. correctness depends on state
-    EXPIRY, not just state lookup. Feed a bounded replay through
-    ``read_events_stream_with_horizon_sentinel`` so the tail's null rows
-    actually flush (see there)."""
-    v = views.select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    ).withWatermark("v_ts", "1 hour")
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    ).withWatermark("c_ts", "1 hour")
-    joined = v.join(
-        c,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
-        "leftOuter",
-    )
-    return joined.select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "click_id",
-        (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("gap_us"),
-    )
-
-
-def stream_stream_attribution_semi(
-    views: DataFrame, clicks: DataFrame, horizon: str = "6 hours"
-) -> DataFrame:
-    """LEFT SEMI stream ⋈ stream attribution — the existence-test join
-    mode: emit each view AT MOST ONCE iff some click by the same user
-    lands within the horizon; no click columns in the output, no
-    duplicate per extra click. Semi completes Spark's stream-stream join
-    matrix (inner/leftOuter/fullOuter are registered above/below): a
-    matched view emits as soon as its first match is seen (either side
-    arriving second triggers it), an unmatched view is silently dropped
-    at state expiry — so unlike the outer modes the output never waits
-    on the watermark, but state eviction still does, which is what
-    bounds the buffers on an unbounded pair."""
-    v = views.select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    ).withWatermark("v_ts", "1 hour")
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    ).withWatermark("c_ts", "1 hour")
-    joined = v.join(
-        c,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
-        "leftSemi",
-    )
-    return joined.select(
-        F.col("v_user").alias("user_id"), "view_id", "v_ts"
-    )
-
-
-def stream_stream_attribution_full_outer(
-    views: DataFrame, clicks: DataFrame, horizon: str = "6 hours"
-) -> DataFrame:
-    """FULL OUTER stream ⋈ stream attribution — both unmatched sides
-    surface: views with no click in the horizon (null click) AND clicks
-    with no preceding view (null view — the organic/untracked
-    conversions). Completes the streaming outer-join matrix (inner /
-    left / full); null rows on EITHER side wait for the other stream's
-    watermark to prove no match can arrive, so both state stores run
-    the expiry path. ``user_id`` is coalesced across sides."""
-    v = views.select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    ).withWatermark("v_ts", "1 hour")
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    ).withWatermark("c_ts", "1 hour")
-    joined = v.join(
-        c,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
-        "fullOuter",
-    )
-    return joined.select(
-        F.coalesce(F.col("v_user"), F.col("c_user")).alias("user_id"),
-        "view_id",
-        "click_id",
-        (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("gap_us"),
-    )
-
-
-def stream_stream_attribution_right_outer(
-    views: DataFrame, clicks: DataFrame, horizon: str = "6 hours"
-) -> DataFrame:
-    """RIGHT OUTER stream ⋈ stream attribution — the mirror of the left
-    outer mode: every click surfaces, matched to its preceding views or
-    as a null-view row (the organic/untracked conversion) once the VIEW
-    stream's watermark proves no qualifying view can still arrive. With
-    inner / leftOuter / fullOuter / leftSemi registered, this closes the
-    stream-stream join matrix completely. ``user_id`` comes from the
-    click side (never null in this mode)."""
-    v = views.select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    ).withWatermark("v_ts", "1 hour")
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    ).withWatermark("c_ts", "1 hour")
-    joined = v.join(
-        c,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
-        "rightOuter",
-    )
-    return joined.select(
-        F.col("c_user").alias("user_id"),
-        "view_id",
-        "click_id",
-        (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("gap_us"),
-    )
 
 
 def stream_static_join(events: DataFrame, customers: DataFrame) -> DataFrame:

@@ -209,7 +209,7 @@ def test_stream_stream_left_outer_null_emission(spark):
 
     from mk_kafka_connect_spark.streaming.windows import (
         run_to_memory,
-        stream_stream_attribution_outer,
+        stream_stream_attribution,
     )
 
     rows = [
@@ -234,7 +234,7 @@ def test_stream_stream_left_outer_null_emission(spark):
     views = stream.filter(F.col("event_type") == "view")
     clicks = stream.filter(F.col("event_type") == "click")
     out = run_to_memory(
-        stream_stream_attribution_outer(views, clicks, "1 hour"), "append"
+        stream_stream_attribution(views, clicks, "1 hour", "leftOuter"), "append"
     ).filter(F.col("user_id") >= 0)
     got = {(r["view_id"], r["click_id"]) for r in out.collect()}
     assert got == {(1, 2), (3, None), (4, None)}

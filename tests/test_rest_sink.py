@@ -53,9 +53,9 @@ def test_rest_sink_retries_500_with_backoff():
     with FakeRestServer({}) as srv:
         w = _RestSinkWriter({"url": srv.url, "entity": "e"})
         sleeps: list[float] = []
-        w.sleep = sleeps.append
+        w.client.sleep = sleeps.append
         srv.fail_next(2)
-        w._post_with_retry(b'{"records": []}', rng_seed=0)
+        w.client.post("e", [])
         assert len(sleeps) == 2
         assert 1.0 <= sleeps[0] <= 1.1  # 2^0 + 10% jitter
         assert 2.0 <= sleeps[1] <= 2.2  # 2^1 + 10% jitter
@@ -65,19 +65,19 @@ def test_rest_sink_429_fixed_wait():
     with FakeRestServer({}) as srv:
         w = _RestSinkWriter({"url": srv.url, "entity": "e"})
         sleeps: list[float] = []
-        w.sleep = sleeps.append
+        w.client.sleep = sleeps.append
         srv.rate_limit_next(1)
-        w._post_with_retry(b'{"records": []}', rng_seed=0)
+        w.client.post("e", [])
         assert sleeps == [60.0]  # Task.java:318 fixed rate-limit wait
 
 
 def test_rest_sink_gives_up_after_max_retries():
     with FakeRestServer({}) as srv:
         w = _RestSinkWriter({"url": srv.url, "entity": "e", "max.retries": "2"})
-        w.sleep = lambda s: None
+        w.client.sleep = lambda s: None
         srv.fail_next(10)
         with pytest.raises(Exception):
-            w._post_with_retry(b'{"records": []}', rng_seed=0)
+            w.client.post("e", [])
         # 1 try + 2 retries
         assert len([r for r in srv.requests if r.startswith("POST")]) == 3
 
@@ -88,7 +88,7 @@ def test_rest_sink_throttles_to_requests_per_second():
             {"url": srv.url, "entity": "e", "batch.size": "5", "requests.per.second": "2"}
         )
         sleeps: list[float] = []
-        w.sleep = sleeps.append
+        w.client.sleep = sleeps.append
         w.clock = lambda: 0.0  # frozen clock: every wait is visible as a sleep
         msg = w.write(iter([Row(id=i) for i in range(12)]))
         assert msg.n_records == 12 and msg.n_requests == 3
@@ -102,6 +102,13 @@ def test_rest_sink_batch_size_validation():
         _RestSinkWriter({"url": "http://x", "batch.size": "501"})
     with pytest.raises(ValueError):
         _RestSinkWriter({})
+
+
+def test_rest_sink_rejects_negative_max_retries():
+    """A negative ``max.retries`` fails when the writer is built, not
+    with a TypeError after sending nothing."""
+    with pytest.raises(ValueError, match="max_retries"):
+        _RestSinkWriter({"url": "http://x", "max.retries": "-1"})
 
 
 # --- streaming flavor (DataSourceStreamWriter) -------------------------------
@@ -118,6 +125,27 @@ def test_stream_sink_commit_posts_epoch_marker():
         w.commit([_SinkCommit(3, 1), None, _SinkCommit(7, 2)], batchId=5)
         markers = srv.posted["ev__commits"]
     assert markers == [{"batch_id": 5, "n_records": 10, "n_requests": 3}]
+
+
+def test_stream_sink_commit_marker_retried_after_500():
+    """A commit marker that meets one HTTP 500 is retried and lands
+    exactly once."""
+    from mk_kafka_connect_spark.sources.rest_sink import (
+        _RestStreamSinkWriter,
+        _SinkCommit,
+    )
+
+    with FakeRestServer({}) as srv:
+        w = _RestStreamSinkWriter({"url": srv.url, "entity": "ev"})
+        sleeps: list[float] = []
+        w.client.sleep = sleeps.append
+        srv.fail_next(1)
+        w.commit([_SinkCommit(4, 1)], batchId=2)
+        markers = srv.posted["ev__commits"]
+        posts = [r for r in srv.requests if r.startswith("POST")]
+    assert markers == [{"batch_id": 2, "n_records": 4, "n_requests": 1}]
+    assert posts == ["POST /api/ev__commits"] * 2
+    assert len(sleeps) == 1 and 1.0 <= sleeps[0] <= 1.1
 
 
 def test_stream_sink_abort_posts_nothing():

@@ -81,6 +81,40 @@ def test_retries_exhausted_raises():
             client.fetch_page_with_retry("customer", "mod_datetime", None, None, 0, 10)
 
 
+def test_negative_max_retries_rejected():
+    """Below 0 the loop would make no request and then raise a TypeError;
+    the constructor refuses it instead."""
+    with pytest.raises(ValueError, match="max_retries"):
+        RestClient("http://127.0.0.1:9", max_retries=-1)
+
+
+def test_parallel_gets_share_no_scripted_fault():
+    """fail_next(1) answers exactly one of 8 concurrent GETs with a 500."""
+    import threading
+    import urllib.error
+    import urllib.request
+
+    with FakeRestServer({"customer": _rows("customer", 3)}) as srv:
+        srv.fail_next(1)
+        gate = threading.Barrier(8)
+        codes: list[int] = []
+
+        def get() -> None:
+            gate.wait()
+            try:
+                with urllib.request.urlopen(f"{srv.url}/customer", timeout=10) as r:
+                    codes.append(r.status)
+            except urllib.error.HTTPError as e:
+                codes.append(e.code)
+
+        threads = [threading.Thread(target=get) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    assert sorted(codes) == [200] * 7 + [500]
+
+
 def test_connection_probe():
     with FakeRestServer({"customer": _rows("customer", 1)}) as srv:
         assert RestClient(srv.url).test_connection()

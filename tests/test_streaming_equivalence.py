@@ -107,3 +107,31 @@ def test_topic_fanout_replays_last_epoch_exactly_once(spark):
     for topic, n, k, s in orc:
         r = rows[topic]
         assert (r.n_records, r.n_keys, r.id_checksum) == (n, k, s)
+
+
+def test_run_to_memory_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """The memory sink keeps the rows on the driver, so the drain's
+    checkpoint dir is gone once it ends (timeout path included) while
+    the returned table still reads every row."""
+    import os
+
+    import pytest
+
+    made: list[str] = []
+    real_mkdtemp = SW.tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(SW.tempfile, "mkdtemp", mkdtemp)
+    spark.range(0, 40).write.parquet(str(tmp_path / "src"))
+    stream = spark.readStream.schema("id long").parquet(str(tmp_path / "src"))
+
+    out = SW.run_to_memory(stream, "append")
+    assert len(made) == 1 and not os.path.exists(made[0])
+    assert sorted(r.id for r in out.collect()) == list(range(40))
+
+    with pytest.raises(TimeoutError):
+        SW.run_to_memory(stream, "append", timeout_s=0.001)
+    assert len(made) == 2 and not os.path.exists(made[1])
