@@ -28,6 +28,7 @@ __all__ = [
     "register_views",
     "default_sf_dir",
     "probe_events_ts",
+    "parquet_parts",
 ]
 
 TABLES: tuple[str, ...] = (
@@ -84,6 +85,22 @@ def _assert_nanos_magnitude(pf: pq.ParquetFile, path: str) -> None:
         )
 
 
+def parquet_parts(path: str) -> list[str]:
+    """The parquet files behind ``path``: the file itself, or every part
+    file of a Spark-written dataset directory, in name order. Raises
+    FileNotFoundError for a directory with no part files."""
+    if not os.path.isdir(path):
+        return [path]
+    parts = sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    if not parts:
+        raise FileNotFoundError(f"no parquet part files under {path}")
+    return parts
+
+
 def probe_events_ts(path: str) -> str:
     """Classify the events fixture's on-disk ts type from the parquet
     footer alone (pyarrow, no Spark job): ``"nanos"`` (TIMESTAMP(NANOS)
@@ -96,19 +113,9 @@ def probe_events_ts(path: str) -> str:
     (`streaming.windows.read_events_stream`) loaders branch on this probe
     instead of assuming a format.
     """
-    probe_path = path
-    if os.path.isdir(path):
-        # Spark writes datasets as part-file directories; every part shares
-        # one schema, so footer-probing the first part is sufficient.
-        parts = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        if not parts:
-            raise FileNotFoundError(f"no parquet part files under {path}")
-        probe_path = parts[0]
-    pf = pq.ParquetFile(probe_path)
+    # Every part of a Spark-written dataset shares one schema, so
+    # footer-probing the first part is sufficient.
+    pf = pq.ParquetFile(parquet_parts(path)[0])
     arrow_ts = pf.schema_arrow.field("ts").type
     if pa.types.is_int64(arrow_ts):
         _assert_nanos_magnitude(pf, path)

@@ -15,17 +15,31 @@ path), all deterministic cross-engine (see ``functions/hashing.py``):
                     families; O(pairs-sharing-a-shingle), not O(n²))
 * embedding near-dup — see ``operators/similarity.py`` (cosine threshold)
 
+The approximate families share ONE band join, and this module is the
+only one that knows the band format. ``_bucket_join`` equi-joins two
+banded relations on (band_idx, band_key); ``_bucket_self_join`` is its
+id_a < id_b self-join form and holds the single materialization of the
+banded side. MinHash cuts its signature into bands with
+``_minhash_bands`` and scores candidates with ``_est_jaccard``
+(``minhash_near_dups``, ``minhash_near_dups_incremental`` and
+``operators.pipeline.decontaminate_lsh``); bit fingerprints
+(SimHash, and aHash/pHash in ``operators/multimodal.py``) go through
+``hamming_near_dups``. A new near-dup operator goes through them too.
+
 Scale notes (100 TB): signature computation is embarrassingly parallel;
-the only shuffles are on (band_idx, band_hash) — uniformly distributed by
+the only shuffles are on (band_idx, band_key) — uniformly distributed by
 construction — and the shingle join, whose hot keys (stop-shingles) should
 be frequency-capped (``max_shingle_freq``) exactly like skewed join salting.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
@@ -42,11 +56,11 @@ __all__ = [
     "shingle_hashes",
     "minhash_signature",
     "minhash_signatures_agg",
-    "lsh_candidate_pairs",
     "minhash_near_dups",
     "minhash_near_dups_incremental",
     "simhash_fingerprint",
     "simhash_near_dups",
+    "hamming_near_dups",
     "ngram_jaccard_pairs",
     "ngram_containment_pairs",
     "connected_components",
@@ -138,38 +152,62 @@ def minhash_signatures_agg(
     )
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame, id_col: str, num_hashes: int = 32, bands: int = 8
+def _minhash_bands(
+    df: DataFrame, text_col: str, id_col: str, n: int, num_hashes: int, bands: int
 ) -> DataFrame:
-    """Banded LSH: split the signature into ``bands`` bands of
-    ``num_hashes/bands`` rows; docs sharing any band are candidates.
-
-    One explode (×bands) + one shuffle on (band_idx, band_key) + self-join
-    within buckets. Band keys are near-uniform, so bucket sizes stay small
-    and the join never explodes — the 100 TB-safe formulation of near-dup
-    detection (vs O(n²) all-pairs)."""
+    """(id_col, sig, band_idx, band_key): each doc's MinHash signature cut
+    into ``bands`` bands of ``num_hashes/bands`` components, one row per
+    band. The signature rides through the explode so the bucket join can
+    score a candidate without joining back to the signature table."""
     rows = num_hashes // bands
-    banded = sig_df.select(
-        F.col(id_col),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> struct(b AS band_idx, "
-                f"concat_ws(',', slice(sig, b * {rows} + 1, {rows})) AS band_key))"
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col(f"a.band_idx") == F.col(f"b.band_idx"))
-            & (F.col(f"a.band_key") == F.col(f"b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+    band = F.expr(
+        f"transform(sequence(0, {bands - 1}), "
+        f"b -> struct(b AS band_idx, "
+        f"concat_ws(',', slice(sig, b * {rows} + 1, {rows})) AS band_key))"
+    )
+    sig = minhash_signatures_agg(df, text_col, id_col, n, num_hashes)
+    return sig.select(id_col, "sig", F.explode(band).alias("band")).select(
+        id_col, "sig", "band.*"
+    )
+
+
+def _est_jaccard(num_hashes: int) -> Column:
+    """Signature-estimated Jaccard of a bucket pair: the fraction of equal
+    components of ``a.sig`` and ``b.sig``."""
+    same = F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y)
+    return (F.size(F.filter(same, lambda v: v)) / F.lit(num_hashes)).alias(
+        "est_jaccard"
+    )
+
+
+def _bucket_join(a: DataFrame, b: DataFrame, on: Column | None = None) -> DataFrame:
+    """Equi-join two banded relations, aliased ``a`` and ``b``, on
+    (band_idx, band_key), plus the optional extra condition ``on``.
+
+    The one shuffle is on the band key. Band keys are near-uniform, so
+    buckets stay small and the join never explodes: the scale-safe form
+    of near-dup detection, against an O(n²) all-pairs scan."""
+    same_bucket = (F.col("a.band_idx") == F.col("b.band_idx")) & (
+        F.col("a.band_key") == F.col("b.band_key")
+    )
+    return a.alias("a").join(b.alias("b"), same_bucket if on is None else same_bucket & on)
+
+
+def _bucket_self_join(banded: DataFrame, id_col: str, score: Column) -> DataFrame:
+    """(id_a, id_b, score) for every bucket-mate pair id_a < id_b of one
+    banded relation; a pair sharing several bands appears once per band.
+
+    ``banded`` is materialized once: the self-join's probe and build
+    sides are separate subtrees to Catalyst (the build side becomes its
+    own BroadcastExchange, so there is no ReusedExchange), and without
+    this the whole fingerprint pipeline (MinHash's shingle explode and
+    32 min-aggregates, or the aHash/pHash payload pass) runs twice per
+    query."""
+    banded = banded.localCheckpoint(eager=False)
+    return _bucket_join(
+        banded, banded, F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    ).select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"), score
     )
 
 
@@ -194,50 +232,9 @@ def minhash_near_dups(
     Cost: the band shuffle carries bands× the signature per doc
     (bands·num_hashes longs ≈ 2 KB/doc), cheaper than two extra shuffles
     of the signature table at any scale."""
-    rows = num_hashes // bands
-    sig_slim = minhash_signatures_agg(df, text_col, id_col, n, num_hashes)
-    banded = sig_slim.select(
-        F.col(id_col),
-        "sig",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> struct(b AS band_idx, "
-                f"concat_ws(',', slice(sig, b * {rows} + 1, {rows})) AS band_key))"
-            )
-        ).alias("band"),
-    ).select(id_col, "sig", "band.band_idx", "band.band_key")
-    # Materialize the banded signatures once: the self-join's probe and
-    # build sides are separate subtrees to Catalyst (the build side
-    # becomes its own BroadcastExchange, so there is no ReusedExchange),
-    # and without this the whole signature pipeline — shingle explode,
-    # per-shingle hash, 32 min-aggregates — evaluates twice per query.
-    banded = banded.localCheckpoint(eager=False)
-    a, b = banded.alias("a"), banded.alias("b")
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        / F.lit(num_hashes)
-    ).alias("est_jaccard")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            est,
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .distinct()
-    )
+    banded = _minhash_bands(df, text_col, id_col, n, num_hashes, bands)
+    pairs = _bucket_self_join(banded, id_col, _est_jaccard(num_hashes))
+    return pairs.filter(F.col("est_jaccard") >= threshold).distinct()
 
 
 def simhash_fingerprint(df: DataFrame, text_col: str, id_col: str = "doc_id") -> DataFrame:
@@ -268,43 +265,47 @@ def simhash_fingerprint(df: DataFrame, text_col: str, id_col: str = "doc_id") ->
     return df.join(fp, id_col)
 
 
+def hamming_near_dups(
+    fp: DataFrame, id_col: str, words: list[str], max_hamming: int
+) -> DataFrame:
+    """Near-dup pairs of a bit fingerprint held in the int64 columns
+    ``words``: (id_a, id_b, hamming) for every pair whose fingerprints
+    differ in ≤ ``max_hamming`` bits. SimHash passes one 32-bit word,
+    aHash and pHash pass their ``[lo, hi]`` 32-bit words.
+
+    Each word gives four 8-bit bands; band b is
+    ``shiftright(words[b // 4], (b % 4) * 8) & 255``. Candidates share at
+    least one band and come from the bucket self-join; the exact
+    distance, the sum of ``bit_count(xor)`` over the words, runs only on
+    bucket-mates. A pair at distance d differs in at most d bands, so
+    with d below the band count it agrees on one (pigeonhole):
+    ``max_hamming`` must stay below 4·len(words), or the join would lose
+    true pairs without notice."""
+    n_bands = 4 * len(words)
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"max_hamming must be < {n_bands} for {n_bands}-band completeness"
+        )
+    keys = F.array(
+        *[F.shiftright(F.col(w), s).bitwiseAND(255) for w in words for s in (0, 8, 16, 24)]
+    )
+    banded = fp.select(id_col, *words, F.posexplode(keys).alias("band_idx", "band_key"))
+    hamming = reduce(
+        operator.add,
+        [F.bit_count(F.col(f"a.{w}").bitwiseXOR(F.col(f"b.{w}"))) for w in words],
+    ).alias("hamming")
+    pairs = _bucket_self_join(banded, id_col, hamming)
+    return pairs.filter(F.col("hamming") <= max_hamming).distinct()
+
+
 def simhash_near_dups(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
-    """SimHash near-dup: candidates share at least one of four 8-bit bands
-    (pigeonhole guarantees hamming ≤ 3 pairs always share a band), then
-    exact hamming filter via bit_count(xor). Returns (id_a, id_b, hamming)."""
-    fp = simhash_fingerprint(df, text_col, id_col).select(id_col, "simhash")
-    banded = fp.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 3), b -> "
-                "struct(b AS band_idx, shiftright(simhash, b * 8) & 255 AS band_key))"
-            )
-        ).alias("band"),
-    ).select(id_col, "simhash", "band.band_idx", "band.band_key")
-    # Single derivation for both self-join sides (see minhash_near_dups).
-    banded = banded.localCheckpoint(eager=False)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming")
-    return pairs.select("id_a", "id_b", hamming).filter(F.col("hamming") <= max_hamming)
+    """SimHash near-dup pairs: :func:`hamming_near_dups` over the 32-bit
+    ``simhash`` (four 8-bit bands, so ``max_hamming`` ≤ 3). Returns
+    (id_a, id_b, hamming)."""
+    fp = simhash_fingerprint(df, text_col, id_col)
+    return hamming_near_dups(fp, id_col, ["simhash"], max_hamming)
 
 
 def _filtered_shingle_relation(
@@ -340,6 +341,29 @@ def _filtered_shingle_relation(
     return ex.join(freq_ok, "s").localCheckpoint(eager=False)
 
 
+def _shingle_overlap(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_shingle_freq: int | None,
+) -> DataFrame:
+    """(id_a, id_b, n_common, n_a, n_b) for every doc pair id_a < id_b
+    sharing a distinct shingle: the overlap count from the shingle-key
+    self-join, and each side's distinct-shingle count."""
+    ex = _filtered_shingle_relation(df, text_col, id_col, n, max_shingle_freq)
+    sizes = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+    a, b = ex.alias("a"), ex.alias("b")
+    common = (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
+        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.select(F.col("doc").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc").alias("id_b"), F.col("n_sh").alias("n_b"))
+    return common.join(sa, "id_a").join(sb, "id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -360,22 +384,12 @@ def ngram_jaccard_pairs(
     the dominant cost is the pair group-by after the join, and the
     interpreted char-fold adds ~20%; string keys kept.)
     Returns (id_a, id_b, jaccard)."""
-    ex = _filtered_shingle_relation(df, text_col, id_col, n, max_shingle_freq)
-    sizes = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = ex.alias("a"), ex.alias("b")
-    common = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("id_b"), F.col("n_sh").alias("n_b"))
     jac = (
         F.col("n_common").cast("double")
         / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
     ).alias("jaccard")
     return (
-        common.join(sa, "id_a").join(sb, "id_b")
+        _shingle_overlap(df, text_col, id_col, n, max_shingle_freq)
         .select("id_a", "id_b", jac)
         .filter(F.col("jaccard") >= threshold)
     )
@@ -555,46 +569,17 @@ def minhash_near_dups_incremental(
     harness); in production they ARE the stored LSH index — computed once
     at ingest, appended per batch — and only ``new_df`` pays signature
     cost."""
-    rows = num_hashes // bands
-
-    def banded(sig_df: DataFrame) -> DataFrame:
-        return sig_df.select(
-            F.col(id_col),
-            "sig",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}), "
-                    f"b -> struct(b AS band_idx, "
-                    f"concat_ws(',', slice(sig, b * {rows} + 1, {rows})) AS band_key))"
-                )
-            ).alias("band"),
-        ).select(id_col, "sig", "band.band_idx", "band.band_key")
-
-    new_b = banded(minhash_signatures_agg(new_df, text_col, id_col, n, num_hashes))
-    all_b = banded(
-        minhash_signatures_agg(old_df, text_col, id_col, n, num_hashes)
-    ).unionByName(new_b)
-    a, b = new_b.alias("a"), all_b.alias("b")
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        / F.lit(num_hashes)
-    ).alias("est_jaccard")
+    new_b = _minhash_bands(new_df, text_col, id_col, n, num_hashes, bands)
+    all_b = _minhash_bands(old_df, text_col, id_col, n, num_hashes, bands).unionByName(
+        new_b
+    )
+    a_id, b_id = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-        )
+        _bucket_join(new_b, all_b, a_id != b_id)
         .select(
-            F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
-            est,
+            F.least(a_id, b_id).alias("id_a"),
+            F.greatest(a_id, b_id).alias("id_b"),
+            _est_jaccard(num_hashes),
         )
         .filter(F.col("est_jaccard") >= threshold)
         .distinct()
@@ -613,23 +598,13 @@ def ngram_containment_pairs(
     asymmetric cousin of Jaccard that catches a SMALL document quoted
     inside a much larger one (their Jaccard is diluted by the size
     mismatch, so symmetric dedup never fires; containment of the small
-    side stays ~1). Emits both directions plus the symmetric Jaccard
-    for pairs where EITHER direction reaches ``threshold``.
+    side stays ~1). Emits both directions for pairs where EITHER
+    direction reaches ``threshold``.
 
     Same shingle-key self-join shape and ``max_shingle_freq`` skew
     guard as :func:`ngram_jaccard_pairs` (including its single-derivation
     checkpoint); only the normalization differs, so scale posture is
     identical."""
-    ex = _filtered_shingle_relation(df, text_col, id_col, n, max_shingle_freq)
-    sizes = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = ex.alias("a"), ex.alias("b")
-    common = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("id_b"), F.col("n_sh").alias("n_b"))
     c_ab = (F.col("n_common").cast("double") / F.col("n_a").cast("double")).alias(
         "containment_ab"
     )
@@ -637,8 +612,7 @@ def ngram_containment_pairs(
         "containment_ba"
     )
     return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, text_col, id_col, n, max_shingle_freq)
         .select("id_a", "id_b", c_ab, c_ba)
         .filter(
             (F.col("containment_ab") >= threshold)

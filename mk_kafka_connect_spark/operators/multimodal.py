@@ -27,6 +27,8 @@ from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import hamming_near_dups
+
 __all__ = [
     "attach_fake_binary",
     "fake_decode_features",
@@ -209,61 +211,19 @@ def average_hash(bin_df: DataFrame, grid: int = 8) -> DataFrame:
 def ahash_near_dups(bin_df: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Image-side near-dup pairs: documents whose 64-bit aHash
     fingerprints differ in ≤ ``max_hamming`` bits — the visual analog of
-    SimHash text dedup, resolved with the SAME pigeonhole band machinery
-    (re-encodes, crops-with-padding, and brightness shifts move only a
-    few bits of an average hash).
+    SimHash text dedup, resolved by the same band join,
+    ``operators.dedup.hamming_near_dups`` (re-encodes, crops-with-padding
+    and brightness shifts move only a few bits of an average hash).
 
     The 64 bits (two 32-bit words from ``average_hash``) split into 8
     bands of 8 bits; any pair with hamming ≤ 7 must agree on at least
     one band (pigeonhole), so candidates come from a band-key hash
     equi-join — never an all-pairs scan — and the exact popcount filter
     runs only on bucket-mates. At 100 TB of images the cost is one
-    fingerprint pass + one band shuffle, identical in shape to
-    ``simhash_near_dups``; ``max_hamming`` must stay < 8 or the band
-    join loses completeness (asserted)."""
-    if max_hamming >= 8:
-        raise ValueError("max_hamming must be < 8 for 8-band completeness")
-    fp = average_hash(bin_df, grid=8).select("doc_id", "ahash_hi", "ahash_lo")
-    banded = fp.select(
-        "doc_id",
-        "ahash_hi",
-        "ahash_lo",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 7), b -> struct(b AS band_idx, "
-                "CASE WHEN b < 4 THEN shiftright(ahash_lo, b * 8) & 255 "
-                "ELSE shiftright(ahash_hi, (b - 4) * 8) & 255 END AS band_key))"
-            )
-        ).alias("band"),
-    ).select("doc_id", "ahash_hi", "ahash_lo", "band.band_idx", "band.band_key")
-    # Single derivation for both self-join sides: the fingerprint pass
-    # (payload decode + 64-cell grid math) would otherwise run twice.
-    banded = banded.localCheckpoint(eager=False)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.ahash_hi").alias("hi_a"),
-            F.col("a.ahash_lo").alias("lo_a"),
-            F.col("b.ahash_hi").alias("hi_b"),
-            F.col("b.ahash_lo").alias("lo_b"),
-        )
-        .distinct()
-    )
-    hamming = (
-        F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-        + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-    ).alias("hamming")
-    return pairs.select("id_a", "id_b", hamming).filter(
-        F.col("hamming") <= max_hamming
-    )
+    fingerprint pass + one band shuffle; ``max_hamming`` must stay < 8
+    or the band join loses completeness (ValueError)."""
+    fp = average_hash(bin_df, grid=8)
+    return hamming_near_dups(fp, "doc_id", ["ahash_lo", "ahash_hi"], max_hamming)
 
 
 def decode_image(payload: bytes):  # pragma: no cover - env-gated
@@ -338,8 +298,8 @@ def perceptual_hash(bin_df: DataFrame, dither: bool = False) -> DataFrame:
     exceeds the EXACT median of the 63 (odd count → the rank-32 order
     statistic, no interpolation). pHash survives blur/re-encode/gamma
     changes that flip many aHash bits, because the comparison basis is
-    frequency-domain; hamming-band machinery downstream is shared with
-    aHash/SimHash.
+    frequency-domain; the band join downstream is
+    ``operators.dedup.hamming_near_dups``, shared with aHash/SimHash.
 
     One vectorized flat-buffer gather + two int64 matmuls per Arrow
     batch — no per-row Python. The 63 bits pack into two words
@@ -417,53 +377,13 @@ def phash_near_dups(
     fp: DataFrame | None = None,
 ) -> DataFrame:
     """Frequency-domain near-dup pairs: documents whose 63-bit DCT
-    pHashes differ in ≤ ``max_hamming`` bits — same 8-band pigeonhole
-    join as ``ahash_near_dups`` (bands 0-3 from the 32-bit lo word,
-    bands 4-7 from the 31-bit hi word, so the last band is 7 bits wide;
-    8 bands still guarantee completeness for hamming ≤ 7). Candidates
+    pHashes differ in ≤ ``max_hamming`` bits — the same 8-band
+    ``hamming_near_dups`` join as ``ahash_near_dups`` (bands 0-3 from
+    the 32-bit lo word, bands 4-7 from the 31-bit hi word, so the last
+    band is 7 bits wide; 8 bands still guarantee completeness for
+    hamming ≤ 7). Candidates
     come from the band hash equi-join, never an all-pairs scan; the
     exact popcount filter runs only on bucket-mates."""
-    if max_hamming >= 8:
-        raise ValueError("max_hamming must be < 8 for 8-band completeness")
     if fp is None:
-        fp = perceptual_hash(bin_df).select("doc_id", "phash_hi", "phash_lo")
-    banded = fp.select(
-        "doc_id",
-        "phash_hi",
-        "phash_lo",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 7), b -> struct(b AS band_idx, "
-                "CASE WHEN b < 4 THEN shiftright(phash_lo, b * 8) & 255 "
-                "ELSE shiftright(phash_hi, (b - 4) * 8) & 255 END AS band_key))"
-            )
-        ).alias("band"),
-    ).select("doc_id", "phash_hi", "phash_lo", "band.band_idx", "band.band_key")
-    # Single derivation for both self-join sides: the DCT fingerprint
-    # pass would otherwise run twice (see ahash_near_dups).
-    banded = banded.localCheckpoint(eager=False)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.phash_hi").alias("hi_a"),
-            F.col("a.phash_lo").alias("lo_a"),
-            F.col("b.phash_hi").alias("hi_b"),
-            F.col("b.phash_lo").alias("lo_b"),
-        )
-        .distinct()
-    )
-    hamming = (
-        F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-        + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-    ).alias("hamming")
-    return pairs.select("id_a", "id_b", hamming).filter(
-        F.col("hamming") <= max_hamming
-    )
+        fp = perceptual_hash(bin_df)
+    return hamming_near_dups(fp, "doc_id", ["phash_lo", "phash_hi"], max_hamming)

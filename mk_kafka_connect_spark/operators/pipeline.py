@@ -106,10 +106,10 @@ def decontaminate_lsh(
     when the benchmark suite is itself corpus-sized (dozens of eval sets
     × contamination variants) and broadcasting its full distinct-shingle
     set (:func:`decontaminate`) no longer fits: both sides reduce to
-    32-component MinHash signatures, candidates come from a hash
-    equi-join on (band_idx, band_key) — never a train×bench product —
-    and a candidate is flagged when the signature-estimated Jaccard
-    clears ``threshold``.
+    32-component MinHash signatures, candidates come from the band-key
+    hash equi-join of ``operators/dedup.py`` — never a train×bench
+    product — and a candidate is flagged when the signature-estimated
+    Jaccard clears ``threshold``.
 
     Complementary contract to the shingle-overlap variant: that one
     catches ABSOLUTE overlap (≥k shared shingles — verbatim leaked
@@ -118,40 +118,18 @@ def decontaminate_lsh(
     the band explode so the signature subtree evaluates once (same
     plan discipline as ``minhash_near_dups``). Returns every train row:
     (id, n_bench_matches, max_est_jaccard, contaminated)."""
-    from .dedup import minhash_signatures_agg
+    from .dedup import _bucket_join, _est_jaccard, _minhash_bands
 
-    rows = num_hashes // bands
-    band_expr = (
-        f"transform(sequence(0, {bands - 1}), "
-        f"b -> struct(b AS band_idx, "
-        f"concat_ws(',', slice(sig, b * {rows} + 1, {rows})) AS band_key))"
-    )
-    sig_t = minhash_signatures_agg(
-        train.select(id_col, text_col), text_col, id_col, n, num_hashes
-    )
-    sig_b = minhash_signatures_agg(
-        benchmark.select(id_col, text_col), text_col, id_col, n, num_hashes
-    )
-    bt = sig_t.select(
-        F.col(id_col), "sig", F.explode(F.expr(band_expr)).alias("band")
-    ).select(id_col, "sig", "band.band_idx", "band.band_key")
-    bb = sig_b.select(
-        F.col(id_col).alias("_bid"),
-        F.col("sig").alias("_bsig"),
-        F.explode(F.expr(band_expr)).alias("band"),
-    ).select("_bid", "_bsig", "band.band_idx", "band.band_key")
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig"), F.col("_bsig"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        / F.lit(num_hashes)
-    ).alias("est_jaccard")
     flagged = (
-        bt.join(bb, ["band_idx", "band_key"])
-        .select(F.col(id_col), F.col("_bid"), est)
+        _bucket_join(
+            _minhash_bands(train, text_col, id_col, n, num_hashes, bands),
+            _minhash_bands(benchmark, text_col, id_col, n, num_hashes, bands),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias(id_col),
+            F.col(f"b.{id_col}").alias("_bid"),
+            _est_jaccard(num_hashes),
+        )
         .filter(F.col("est_jaccard") >= threshold)
         .distinct()
         .groupBy(id_col)

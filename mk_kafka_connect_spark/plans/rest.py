@@ -16,13 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import shutil
 import uuid
 
 from ..catalog import load_table
 from ..sources.fake_server import FakeRestServer
 from ..sources.rest_sink import register_sink
 from ..sources.rest_source import register
-from .materialize import local_relation
+from .materialize import local_relation, materialize_result
 from .registry import query
 
 # One server per (process, sf_dir): queries are constructed lazily and
@@ -379,7 +380,8 @@ def kafka_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-construction defect surfaces as a hash mismatch. The real broker
     path shares this byte contract and stays classpath-gated
     (sources/kafka.py); the files themselves are replayable into a live
-    cluster."""
+    cluster. The 300-row result is copied to the driver and the files
+    are removed."""
     import tempfile
 
     from ..operators.cdc import (
@@ -406,17 +408,23 @@ def kafka_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     path = tempfile.mkdtemp(prefix="kafka_files_")
-    write_kafka_files(rec, path)
-    back = read_kafka_files(spark, path, topic="cdc.events")
-    decoded = decode_json_topic(
-        back,
-        "event_id long, event_type string, user_id long, "
-        "_entity_type string, _load_mode string",
-    )
-    return decoded.select(
-        "topic", "key", "event_id", "event_type", "user_id",
-        "_entity_type", "_load_mode",
-    )
+    try:
+        write_kafka_files(rec, path)
+        back = read_kafka_files(spark, path, topic="cdc.events")
+        decoded = decode_json_topic(
+            back,
+            "event_id long, event_type string, user_id long, "
+            "_entity_type string, _load_mode string",
+        )
+        return materialize_result(
+            spark,
+            decoded.select(
+                "topic", "key", "event_id", "event_type", "user_id",
+                "_entity_type", "_load_mode",
+            ),
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -447,7 +455,8 @@ def cdc_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CO-README:70-86) — and the landed files are read back for the hash
     check. This certifies the one piece the per-stage queries don't: the
     exactly-once file-sink commit of the streaming drain. Fresh
-    sink/checkpoint dirs per call keep reruns independent."""
+    sink/checkpoint dirs per call keep reruns independent; the 500-row
+    result is copied to the driver and both dirs are removed."""
     import tempfile
 
     from ..pipeline import CdcPipeline
@@ -468,10 +477,17 @@ def cdc_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = tempfile.mkdtemp(prefix="cdc_sink_")
     ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_")
-    pipe.run_stream_to_parquet(spark, path, ckpt)
-    return spark.read.parquet(path).select(
-        "entity", "key", "payload", "_load_mode", "_entity_type", "topic"
-    )
+    try:
+        pipe.run_stream_to_parquet(spark, path, ckpt)
+        return materialize_result(
+            spark,
+            spark.read.parquet(path).select(
+                "entity", "key", "payload", "_load_mode", "_entity_type", "topic"
+            ),
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(

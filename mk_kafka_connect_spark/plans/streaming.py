@@ -235,17 +235,17 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
     filtered from the output) that models the stream continuing; the
     no-data micro-batch then flushes every pending outer row and the
     drain equals the batch LEFT JOIN oracle exactly."""
-    ev = SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours")
-    views = ev.filter(F.col("event_type") == "view")
-    clicks = ev.filter(F.col("event_type") == "click")
-    out = SW.stream_stream_attribution(views, clicks, "6 hours", "leftOuter")
-    # Strip the sentinel AFTER the drain, on the batch result. Filtering
-    # inside the streaming plan looks equivalent but is not: Catalyst
-    # pushes user_id >= 0 below the EventTimeWatermark operators (it's a
-    # left-side key predicate, propagated to both join inputs), the scan
-    # drops the sentinel rows before the watermark sees them, and the
-    # tail's null rows silently never flush — measured, not theoretical.
-    return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
+    with SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours") as ev:
+        views = ev.filter(F.col("event_type") == "view")
+        clicks = ev.filter(F.col("event_type") == "click")
+        out = SW.stream_stream_attribution(views, clicks, "6 hours", "leftOuter")
+        # Strip the sentinel AFTER the drain, on the batch result. Filtering
+        # inside the streaming plan looks equivalent but is not: Catalyst
+        # pushes user_id >= 0 below the EventTimeWatermark operators (it's a
+        # left-side key predicate, propagated to both join inputs), the scan
+        # drops the sentinel rows before the watermark sees them, and the
+        # tail's null rows silently never flush — measured, not theoretical.
+        return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
 
 
 @query(
@@ -272,11 +272,11 @@ def streaming_stream_stream_right_join(spark: SparkSession, sf_dir: str) -> Data
     would withhold the tail's null rows), stripped after the drain —
     pushing the filter into the streaming plan would sink it below the
     watermark operators and silently lose the flush."""
-    ev = SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours")
-    views = ev.filter(F.col("event_type") == "view")
-    clicks = ev.filter(F.col("event_type") == "click")
-    out = SW.stream_stream_attribution(views, clicks, "6 hours", "rightOuter")
-    return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
+    with SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours") as ev:
+        views = ev.filter(F.col("event_type") == "view")
+        clicks = ev.filter(F.col("event_type") == "click")
+        out = SW.stream_stream_attribution(views, clicks, "6 hours", "rightOuter")
+        return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
 
 
 @query(
@@ -411,11 +411,11 @@ def streaming_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataF
     user_id −1 and are stripped AFTER the drain — in-plan filtering
     sinks below the watermark operators and the nulls never flush);
     hash-matches the batch FULL JOIN oracle."""
-    ev = SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours")
-    views = ev.filter(F.col("event_type") == "view")
-    clicks = ev.filter(F.col("event_type") == "click")
-    out = SW.stream_stream_attribution(views, clicks, "6 hours", "fullOuter")
-    return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
+    with SW.read_events_stream_with_horizon_sentinel(spark, sf_dir, "9 hours") as ev:
+        views = ev.filter(F.col("event_type") == "view")
+        clicks = ev.filter(F.col("event_type") == "click")
+        out = SW.stream_stream_attribution(views, clicks, "6 hours", "fullOuter")
+        return SW.run_to_memory(out, "append").filter(F.col("user_id") >= 0)
 
 
 @query(

@@ -17,12 +17,14 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import probe_events_ts
+from ..catalog import parquet_parts, probe_events_ts
 from ..functions.exact import dec2
 
 __all__ = [
@@ -229,12 +231,14 @@ def stream_stream_attribution(
     )
 
 
+@contextmanager
 def read_events_stream_with_horizon_sentinel(
     spark: SparkSession, sf_dir: str, advance: str = "9 hours"
-) -> DataFrame:
-    """The events stream UNIONED with a two-row far-future sentinel
-    (one 'view' + one 'click', ``user_id = -1``, ts = fixture max +
-    ``advance``), for bounded replays of OUTER stateful operators.
+) -> Iterator[DataFrame]:
+    """Context manager yielding the events stream UNIONED with a two-row
+    far-future sentinel (one 'view' + one 'click', ``user_id = -1``,
+    ts = fixture max + ``advance``), for bounded replays of OUTER
+    stateful operators.
 
     Outer join null rows / final session flushes are emitted only when
     the watermark passes the row's expiry. On an unbounded Kafka feed
@@ -250,24 +254,19 @@ def read_events_stream_with_horizon_sentinel(
 
     The sentinel parquet is written driver-side into a throwaway temp dir
     (normalized µs timestamps), read as a second file stream, and unioned
-    — the fixture dir itself is never touched."""
+    — the fixture dir itself is never touched. The file stream lists that
+    dir when a drain runs, so drain inside the ``with`` block
+    (``run_to_memory``'s memory sink keeps the rows); the dir is removed
+    on exit."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     ev = read_events_stream(spark, sf_dir)
     # Fixture max(ts) from the parquet footers (driver-side, no Spark
-    # job); reuse the probe so nanos/µs fixtures both work, and handle
-    # Spark-written part-file DIRECTORIES like catalog.probe_events_ts
-    # (stats must come from EVERY part — one part's max is not the max).
+    # job); reuse the probe so nanos/µs fixtures both work. Stats must
+    # come from EVERY part of a dataset dir: one part's max is not the max.
     path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        parts = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    else:
-        parts = [path]
+    parts = parquet_parts(path)
     kind = probe_events_ts(path)
     max_us = None
     for part in parts:
@@ -301,25 +300,28 @@ def read_events_stream_with_horizon_sentinel(
     adv_us = int(qty) * {"hours": 3600, "minutes": 60, "seconds": 1}[unit] * 10**6
     sent_us = max_us + adv_us
     d = tempfile.mkdtemp(prefix="wm_sentinel_")
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([-1, -2], pa.int64()),
-                "ts": pa.array([sent_us, sent_us], pa.timestamp("us")),
-                "user_id": pa.array([-1, -1], pa.int64()),
-                "event_type": pa.array(["view", "click"], pa.string()),
-                "value": pa.array([0.0, 0.0], pa.float64()),
-                "props": pa.array(["{}", "{}"], pa.string()),
-            }
-        ),
-        os.path.join(d, "sentinel.parquet"),
-    )
-    sent = (
-        spark.readStream.schema(_events_schema(T.TimestampNTZType()))
-        .parquet(d)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    return ev.unionByName(sent)
+    try:
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([-1, -2], pa.int64()),
+                    "ts": pa.array([sent_us, sent_us], pa.timestamp("us")),
+                    "user_id": pa.array([-1, -1], pa.int64()),
+                    "event_type": pa.array(["view", "click"], pa.string()),
+                    "value": pa.array([0.0, 0.0], pa.float64()),
+                    "props": pa.array(["{}", "{}"], pa.string()),
+                }
+            ),
+            os.path.join(d, "sentinel.parquet"),
+        )
+        sent = (
+            spark.readStream.schema(_events_schema(T.TimestampNTZType()))
+            .parquet(d)
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+        )
+        yield ev.unionByName(sent)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def stream_static_join(events: DataFrame, customers: DataFrame) -> DataFrame:

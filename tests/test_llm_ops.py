@@ -52,6 +52,70 @@ def test_simhash_flags_near_dups(spark):
         assert caught >= 0.5, f"simhash recall on strongest dups too low: {caught}"
 
 
+@pytest.mark.parametrize("family", ["simhash", "ahash", "phash"])
+def test_hamming_near_dups_reject_incomplete_bands(spark, family):
+    """With four 8-bit bands per 32-bit word, a pair at hamming 4·words
+    that differs by one bit in every band shares no band, so the band
+    join would drop it without notice: each bit-fingerprint family
+    refuses that distance instead."""
+    from mk_kafka_connect_spark.operators.multimodal import (
+        ahash_near_dups,
+        attach_fake_binary,
+        phash_near_dups,
+    )
+
+    docs = load_table(spark, SF, "documents")
+    calls = {
+        "simhash": lambda: D.simhash_near_dups(docs, "text", "doc_id", max_hamming=4),
+        "ahash": lambda: ahash_near_dups(attach_fake_binary(docs), max_hamming=8),
+        "phash": lambda: phash_near_dups(attach_fake_binary(docs), max_hamming=8),
+    }
+    with pytest.raises(ValueError, match="band completeness"):
+        calls[family]()
+
+
+@pytest.mark.parametrize("n_words", [1, 2])
+def test_hamming_near_dups_matches_all_pairs_scan(spark, n_words):
+    """At the largest allowed distance (3 for one word, 7 for two) the
+    band join returns exactly the pairs an all-pairs popcount scan
+    finds, including a pair that agrees on one band only."""
+    import random
+    from itertools import combinations
+
+    rng = random.Random(n_words)
+    words = [f"w{i}" for i in range(n_words)]
+    max_hamming = 4 * n_words - 1
+    fps = []
+    for _ in range(6):
+        seed = [rng.getrandbits(32) for _ in words]
+        for _ in range(6):
+            fp = list(seed)
+            for _ in range(rng.randrange(max_hamming + 3)):
+                bit = rng.randrange(32 * n_words)
+                fp[bit // 32] ^= 1 << (bit % 32)
+            fps.append(fp)
+    # Low bit of every band but band 0 flipped: distance max_hamming,
+    # and band 0 is the only band the pair (0, last) shares.
+    one_band = list(fps[0])
+    for band in range(1, 4 * n_words):
+        one_band[band // 4] ^= 1 << (band % 4 * 8)
+    fps.append(one_band)
+
+    want = set()
+    for i, j in combinations(range(len(fps)), 2):
+        d = sum(bin(x ^ y).count("1") for x, y in zip(fps[i], fps[j]))
+        if d <= max_hamming:
+            want.add((i, j, d))
+    assert (0, len(fps) - 1, max_hamming) in want
+    fp_df = spark.createDataFrame(
+        [(i, *fp) for i, fp in enumerate(fps)],
+        ", ".join(["id long"] + [f"{w} long" for w in words]),
+    )
+    got = D.hamming_near_dups(fp_df, "id", words, max_hamming).collect()
+    assert len(got) == len(want)
+    assert {(r.id_a, r.id_b, r.hamming) for r in got} == want
+
+
 def test_lsh_topk_recall_vs_bruteforce(spark):
     """Hyperplane-LSH top-10 must reach ≥60% average recall of the exact
     top-10 at 8 planes / radius 4 (wide probe because the fixture

@@ -350,6 +350,26 @@ def test_no_direct_collect_into_createdataframe():
     )
 
 
+def test_band_format_only_in_dedup():
+    """operators/dedup.py is the ONE operator module that knows the LSH
+    band format: every near-dup operator bands its fingerprint and joins
+    bucket-mates through its band join, so ``band_idx`` appears nowhere
+    else in operators/. (The DuckDB oracle SQL in plans/ is reference
+    code and spells the band join out on purpose.)"""
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "mk_kafka_connect_spark" / "operators"
+    offenders = [
+        p.name
+        for p in sorted(ops.rglob("*.py"))
+        if p.name != "dedup.py" and "band_idx" in p.read_text()
+    ]
+    assert not offenders, (
+        f"band_idx in {offenders}; band and join through operators/dedup.py "
+        "(hamming_near_dups, or the MinHash bucket join)"
+    )
+
+
 def test_engine_code_reaches_workers_by_value_only():
     """Engine code reaches Python workers one way: its modules are pickled
     by value through PySpark's own ``pyspark.cloudpickle``. The standalone

@@ -12,6 +12,7 @@ DuckDB dialect.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from mk_kafka_connect_spark.catalog import load_table
 from mk_kafka_connect_spark.functions.exact import dec2
@@ -135,3 +136,28 @@ def test_run_to_memory_removes_its_checkpoint(spark, tmp_path, monkeypatch):
     with pytest.raises(TimeoutError):
         SW.run_to_memory(stream, "append", timeout_s=0.001)
     assert len(made) == 2 and not os.path.exists(made[1])
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_stream_stream_left_join",
+        "streaming_stream_stream_right_join",
+        "streaming_stream_stream_full_join",
+        "cdc_pipeline_end_to_end",
+        "kafka_file_roundtrip",
+    ],
+)
+def test_query_leaves_no_temp_dir(spark, tmp_path, monkeypatch, name):
+    """Queries that stage files in temp dirs (a watermark sentinel, a
+    streaming sink and its checkpoint, Kafka-shaped files) remove them:
+    once the query has run and its result has been read, nothing is
+    left in the temp root."""
+    import tempfile
+
+    from mk_kafka_connect_spark.plans import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = QUERIES[name].fn(spark, SF_DIR)
+    assert out.count() > 0
+    assert sorted(p.name for p in tmp_path.iterdir()) == []
